@@ -136,7 +136,9 @@ object Bench {
     canary()
     shuffleCanary()
     selected.foreach { case (name, fn) =>
-      try run(name, fn) catch { case _: Throwable => () }
+      try run(name, fn) catch {
+        case e: Throwable => Graft.reportFailure("bench", s"$name (warm-up)", e)
+      }
     }
     spark.catalog.clearCache()
 
@@ -151,7 +153,10 @@ object Bench {
       shCanaries += shuffleCanary()
       for ((name, fn) <- ordered) {
         val t0 = System.nanoTime()
-        try run(name, fn) catch { case _: Throwable => failedQ += name }
+        try run(name, fn) catch {
+          case e: Throwable =>
+            if (failedQ.add(name)) Graft.reportFailure("bench", name, e)
+        }
         val dt = (System.nanoTime() - t0) / 1e9
         // drop any cache the query built for itself so every pass (and
         // the next query) starts cold — no pass measures a cache hit

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory + table catalog for the graft engine.
   *
@@ -59,6 +63,17 @@ object Graft {
     }
   }
 
+  /** One stderr line naming why a call failed: the call's name, then the
+    * root cause's class and message (Spark wraps a task failure in several
+    * layers, and the outer message alone often hides the cause).
+    */
+  def reportFailure(tag: String, name: String, e: Throwable): Unit = {
+    val root = Option(
+      org.apache.commons.lang3.exception.ExceptionUtils.getRootCause(e)).getOrElse(e)
+    System.err.println(
+      s"[$tag] $name failed: ${root.getClass.getName}: ${root.getMessage}")
+  }
+
   /** Widen a pathologically narrow scan so a per-row-heavy kernel
     * parallelizes — the g10 row-group lesson, factored for every
     * kernel-dominated call site (map-match, BPE encode, span scrub,
@@ -103,10 +118,17 @@ object Graft {
 }
 
 /** Lazy readers for the driver-generated star schema at one scale factor.
-  * Plain `spark.read.parquet` so Catalyst gets full pushdown/pruning.
+  *
+  * A table's parquet schema is resolved once per session ([[Tables.read]]):
+  * inference is a Spark job (about 65–100 ms a call at sf0.1), supplying the
+  * schema is not (5–10 ms), and every query reads several tables. Only the
+  * `StructType` is cached. Data and DataFrames are not: each call still
+  * builds a fresh DataFrame over a fresh file index, so an added, removed or
+  * rewritten file is seen at once, and the plan is the one inference gives —
+  * same attributes, same pushdown, same pruning.
   */
 final case class Tables(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = table("region")
   def nation: DataFrame     = table("nation")
@@ -176,4 +198,56 @@ final case class Tables(spark: SparkSession, dir: String) {
     * [[embeddings]] — a 1-row filter never amortizes a repartition.
     */
   def embeddingsKernelParallel: DataFrame = Graft.kernelParallel(embeddings)
+}
+
+object Tables {
+  /** Every file under a table path: (path, length, modification time). */
+  private type Listing = Seq[(String, Long, Long)]
+
+  /** Per session: (path, schema confs) -> the listing the schema was
+    * inferred from, and that schema. Weak keys, so nothing outlives its
+    * session; one entry per path and conf set, so a rewrite replaces it.
+    */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[(String, Map[String, String]), (Listing, StructType)]]())
+
+  /** The parquet table at `path`, with its schema inferred at most once per
+    * session for each listing of the path and each set of explicitly set
+    * `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs (they change
+    * the inferred types: nanosAsLong, binaryAsString, mergeSchema …). The
+    * path is listed on every call (about 0.02 ms locally), so a changed file
+    * set misses and is inferred again. A missing path reads as before and
+    * fails with Spark's own error.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    listing(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val cache = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+        val key = (path, spark.conf.getAll.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") ||
+            k.startsWith("spark.sql.legacy.parquet.")
+        })
+        Option(cache.get(key)) match {
+          case Some((`files`, schema)) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            cache.put(key, (files, df.schema))
+            df
+        }
+    }
+
+  private def listing(spark: SparkSession, path: String): Option[Listing] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: listFiles also looks up block locations,
+    // which costs about 3 ms a call locally against 0.02 ms
+    def files(p: Path): Listing = fs.listStatus(p).toSeq.flatMap { f =>
+      if (f.isDirectory) files(f.getPath)
+      else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    try Some(files(root).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+  }
 }

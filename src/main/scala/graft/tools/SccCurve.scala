@@ -43,7 +43,7 @@ object SccCurve {
     // the r36 wiring (queries/GraphQ.scala "r36_scc_scaled"), verbatim,
     // over the synthetic keys — hash + block structure + SCC + rollup
     def build(): org.apache.spark.sql.DataFrame = {
-      val o = spark.read.parquet(ordersPath)
+      val o = graft.Tables(spark, outDir).table("orders")
       val nn = 8L * math.max(o.count() / 400, 8L)
       val h0 = o.select(col("o_orderkey"),
         (graft.functions.text.saltedHash32(
