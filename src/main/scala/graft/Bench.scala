@@ -18,37 +18,21 @@ import org.apache.spark.sql.SparkSession
   * The noop sink materializes every output column (unlike `count()`,
   * under which Catalyst eliminates sorts and prunes expensive
   * projections, so the measured work would not be the query's work).
+  * Env settings: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (the session's
+  * cores, see [[Graft.session]]), SPARK_GRAFT_GTFS_ROOT, and the local
+  * iteration aids SPARK_GRAFT_ONLY and SPARK_GRAFT_PASSES.
   */
 object Bench {
+  /** Round-robin interleaving runs every other selected query between two
+    * passes of one query; Spark's default 100-entry codegen cache would
+    * evict every generated class in between, so each timed pass would
+    * recompile codegen (work the warm-up pass is supposed to absorb).
+    */
+  val CodegenCacheEntries = 10000
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors))
-    // SPARK_GRAFT_SHUFFLE decouples shuffle partitions from cpus for
-    // loop-floor tuning experiments (echoed in knobs; driver never sets)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // round-robin interleaving runs ~59 queries between two passes of
-      // the same query; the default 100-entry codegen cache would evict
-      // every generated class in between, so each timed pass would
-      // re-compile codegen (work the warmup pass is supposed to absorb)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // keep the driver-parsed stderr tail free of the benign
-    // FileStreamSink glob-probe stack (see Graft.silenceKnownBenignWarns)
-    graft.Graft.silenceKnownBenignWarns()
-    // opt-in: parallelize the single-row-group documents scan (see
-    // Tables.documents) — local tuning experiments only
-    sys.env.get("SPARK_GRAFT_DOCS_REPART")
-      .foreach(n => spark.conf.set("spark.graft.docs.repartition", n))
+    val spark = Graft.session(codegenCacheEntries = Some(CodegenCacheEntries))
 
     def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -84,9 +68,7 @@ object Bench {
       case c if c < 0x20 => f"\\u${c.toInt}%04x"
       case c => c.toString
     }
-    val knobs = Seq("SPARK_GRAFT_ONLY", "SPARK_GRAFT_PASSES",
-        "SPARK_GRAFT_AQE", "SPARK_GRAFT_DOCS_REPART", "SPARK_GRAFT_CPUS",
-        "SPARK_GRAFT_SHUFFLE")
+    val knobs = Seq("SPARK_GRAFT_ONLY", "SPARK_GRAFT_PASSES", "SPARK_GRAFT_CPUS")
       .flatMap(k => sys.env.get(k).map(v => s""""$k":"${jesc(v)}""""))
     val knobsJson =
       if (knobs.isEmpty) "" else knobs.mkString(""","knobs":{""", ",", "}")

@@ -32,10 +32,9 @@ object Graft {
     * raised the whole logger to ERROR, which also swallowed legitimate
     * sink WARNs in streaming sessions.)
     *
-    * Call AFTER the session exists (every entrypoint does): the created
-    * LoggerConfig snapshots its parent's CURRENT level, and before any
-    * session log4j runs its pre-init DefaultConfiguration whose root is
-    * ERROR — calling first would freeze that in.
+    * [[session]] calls it AFTER the session exists: the created LoggerConfig
+    * snapshots its parent's CURRENT level, and before any session log4j's
+    * pre-init root level is ERROR — calling first would freeze that in.
     */
   def silenceKnownBenignWarns(): Unit = {
     import org.apache.logging.log4j.LogManager
@@ -56,7 +55,7 @@ object Graft {
         cfg.addLogger(name, c)
         c
     }
-    // idempotent: session() is called per-entrypoint and filters stack
+    // idempotent: session() may run more than once per JVM, filters stack
     if (lc.getFilter == null) {
       lc.addFilter(filter)
       ctx.updateLoggers()
@@ -93,16 +92,19 @@ object Graft {
     if (df.rdd.getNumPartitions * 2 < cores) df.repartition(cores) else df
   }
 
-  /** Build a local session with scale-appropriate defaults. On a cluster the
-    * same settings apply except master/memory come from spark-submit.
+  /** The one session factory, for every entry point, the tests and the
+    * benchmark harness. The master defaults to `local[SPARK_GRAFT_CPUS or
+    * all cores]`; `local[N]` gets N shuffle partitions. `codegenCacheEntries`
+    * sizes the codegen cache, a static conf, for runs that interleave many
+    * queries between two passes of one (Bench, Profile).
     */
-  def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession
-      .builder()
+  def session(
+      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        String.valueOf(Runtime.getRuntime.availableProcessors))}]",
+      codegenCacheEntries: Option[Int] = None): SparkSession = {
+    val builder = SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -110,11 +112,19 @@ object Graft {
       // type for; read as long and normalize in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    master match {
+      case LocalThreads(n) => builder.config("spark.sql.shuffle.partitions", n.toLong)
+      case _ =>
+    }
+    codegenCacheEntries
+      .foreach(n => builder.config("spark.sql.codegen.cache.maxEntries", n.toLong))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     silenceKnownBenignWarns()
     spark
   }
+
+  private val LocalThreads = """local\[(\d+)\]""".r
 }
 
 /** Lazy readers for the driver-generated star schema at one scale factor.
@@ -162,17 +172,10 @@ final case class Tables(spark: SparkSession, dir: String) {
     * CPU in per-row codegen kernels directly over this scan. The local
     * testdata is a single parquet row group, so Spark gives the scan ONE
     * task no matter how many cores exist (a row group is the minimum
-    * split unit); `spark.graft.docs.repartition=N` (opt-in, unset by
-    * default) round-robins the scan into N partitions so those kernels
-    * parallelize. A no-op knob at cluster scale, where file splits
-    * already provide parallelism — never set it there: it would shuffle
-    * the whole corpus for nothing.
+    * split unit); kernel-dominated queries read through
+    * [[documentsKernelParallel]], which widens only that case.
     */
-  def documents: DataFrame = {
-    val docs = table("documents")
-    spark.conf.getOption("spark.graft.docs.repartition")
-      .map(n => docs.repartition(n.toInt)).getOrElse(docs)
-  }
+  def documents: DataFrame = table("documents")
 
   /** [[documents]] for KERNEL-DOMINATED scans (minhash, winnowing,
     * decontamination): repartitioned to defaultParallelism ONLY when the

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round profiling tool: per-JOB wall-clock breakdown of a
   * query's timed (noop-sink) run — the job-level complement of
@@ -15,19 +14,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    // the sfDir arg is recognized by being an existing DIRECTORY (ADVICE
-    // r16: the startsWith("/") test silently misparsed a relative data
-    // dir as a query name) — relative paths work now
-    val (sfDir, names) =
-      if (args.nonEmpty && new java.io.File(args.head).isDirectory)
-        (args.head, args.drop(1).toSeq)
-      else (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-        args.toSeq)
-    require(names.nonEmpty,
-      "usage: Profile [sfDir (absolute or relative, must exist)] <query ...>")
-    val unknown = names.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Graft.session()
+    val (sfDir, names) = Explain.dirAndQueriesOrExit(args.toSeq)
+    require(names.nonEmpty, "usage: Profile [sfDir] <query ...>")
+    // the same codegen cache as Bench, whose timed pass this profiles
+    val spark = Graft.session(codegenCacheEntries = Some(Bench.CodegenCacheEntries))
 
     case class Job(id: Int, start: Long, var end: Long = -1L,
                    var stages: Int = 0, var tasks: Int = 0,

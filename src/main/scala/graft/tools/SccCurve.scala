@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r36 scaling-curve point generator + engine timing (BENCH_NOTES
@@ -26,15 +25,7 @@ object SccCurve {
     val nOrders = args(0).toLong
     val outDir = args(1)
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.session()
 
     val ordersPath = s"$outDir/orders.parquet"
     spark.range(nOrders).select(col("id").as("o_orderkey"))

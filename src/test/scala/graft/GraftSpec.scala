@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** Session-factory contracts: the benign-WARN filter is surgical (drops
   * exactly the FileStreamSink glob-probe event, nothing else from that
   * logger), and Tables.events normalizes every ts encoding the driver's
-  * generator has shipped.
+  * generator has shipped. The shared test session follows the policy.
   */
 class GraftSpec extends SparkTestBase {
 
@@ -29,12 +29,7 @@ class GraftSpec extends SparkTestBase {
   }
 
   test("silenceKnownBenignWarns drops only the glob-probe WARN") {
-    // the production call order: session first (which initializes log4j
-    // from Spark's profile and sets root WARN), THEN the filter — calling
-    // silence() before any session would freeze log4j's pre-init
-    // DefaultConfiguration root level (ERROR) into the new LoggerConfig
-    assert(spark.version.nonEmpty)
-    Graft.silenceKnownBenignWarns()
+    assert(spark.version.nonEmpty) // Graft.session installs the filter
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val cfg = ctx.getConfiguration
     val lc = cfg.getLoggerConfig(sinkLogger)
@@ -110,5 +105,17 @@ class GraftSpec extends SparkTestBase {
       assert(e.schema("ts").dataType != LongType, sf)
       assert(e.select(col("ts")).limit(1).count() == 1, sf)
     }
+  }
+
+  test("the shared test session follows the Graft.session policy") {
+    val expected = Map("spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false", "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> "8")
+    assert(expected.map { case (k, _) => k -> spark.conf.get(k) } == expected)
+    assert(spark.sparkContext.master == "local[8]")
+    // the fork's -Dspark.sql.warehouse.dir, qualified by Spark
+    assert(spark.conf.get("spark.sql.warehouse.dir") ==
+      "file:" + sys.props("spark.sql.warehouse.dir"))
   }
 }

@@ -12,21 +12,7 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // per-fork warehouse (build.sbt testGrouping runs suite groups in
-      // parallel forked JVMs — each needs its own managed-table root)
-      .config("spark.sql.warehouse.dir",
-        sys.props.getOrElse("graft.test.warehouse",
-          "/tmp/graft-test-warehouse"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Each test fork passes its own warehouse dir as a system property
+    * (build.sbt testGrouping), which SparkConf reads. */
+  lazy val session: SparkSession = Graft.session("local[8]")
 }
