@@ -7,8 +7,9 @@ import org.apache.spark.scheduler._
   * [[Explain]]'s plan dump. Each named query runs once untimed (JIT +
   * footer warmup, the Bench methodology), then once against the noop
   * sink with a listener recording every job's duration, stage count and
-  * task count. Loop queries show their per-round cost directly: one
-  * line per checkpoint/probe job.
+  * task count; the `jobs=` line carries the query's totals, so two
+  * builds compare by one `diff` of those lines. Loop queries show their
+  * per-round cost directly: one line per checkpoint/probe job.
   *
   * Usage: runMain graft.Profile [sfDir] <queryName ...>
   */
@@ -85,7 +86,8 @@ object Profile {
       import scala.jdk.CollectionConverters._
       val js = jobs.values.asScala.toSeq.sortBy(_.id)
       val acc = js.filter(_.end > 0).map(j => j.end - j.start).sum / 1e3
-      println(f"jobs=${js.size}%d  sum(job wall)=$acc%.3f s  " +
+      println(f"jobs=${js.size}%d  stages=${js.map(_.stages).sum}%d  " +
+        f"tasks=${js.map(_.tasks).sum}%d  sum(job wall)=$acc%.3f s  " +
         "(gaps = driver planning/analysis time)")
       var prevEnd = -1L
       val stById = stages.values.asScala.toSeq.groupBy(_.job)

@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one equi-join of the edge frame against the
   * keys-scale label frame (edges pre-hash-partitioned on dst — the
-  * join key — so the label side is the only mover; against a
-  * dst-bucketed at-rest edge table even that elides, the r08
-  * doctrine), then TWO map-side-combined aggregates: (src, label)
-  * counts, and the per-src argmax as `min(struct(-count, label))` — an
+  * join key — so the label side is the only mover; over a frame of a
+  * dst-bucketed edge table even that elides, the r08 doctrine), then
+  * TWO map-side-combined aggregates: (src, label) counts, and the
+  * per-src argmax as `min(struct(-count, label))` — an
   * ordinary reducible aggregate, NO window, so the argmax combines on
   * the map side instead of sorting each src's candidates. Labels are
   * materialized per round through the shared Iteration materializer
@@ -43,6 +43,17 @@ object Communities {
     * per-round join broadcasts it and the O(E) side never exchanges;
     * leave false when V outgrows the broadcast budget (the join then
     * shuffles labels to the dst-partitioned edges).
+    *
+    * `edges` picks the layout ([[graft.operators.Iteration.stage]]): a
+    * frame over a dst-BUCKETED edge table
+    * ([[graft.sources.Warehouse.writeBucketed]] on dst) is read at rest —
+    * the O(E) side of every round's label join reads the bucket layout
+    * from the metastore and never exchanges, at any V, with no
+    * V-fits-in-memory contract; only the label frame and the candidate
+    * aggregates move. Any other frame is staged in memory,
+    * hash-partitioned on dst unless `prePartitionEdges = false`.
+    * Identical labels either way (CoresSpec pins equality and the
+    * exchange count).
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
                        checkpointDir: Option[String] = None,
@@ -51,13 +62,20 @@ object Communities {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val spark = edges.sparkSession
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val eSel = edges.select(col("src"), col("dst"))
-    val e = ckpt(if (prePartitionEdges) eSel.repartition(col("dst")) else eSel)
-    // rounds plan under an edge-count-derived partition count (e is
-    // materialized; Iteration.roundPartitions has the measured numbers)
-    val parts = graft.operators.Iteration.roundPartitions(spark, e.count())
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      lpaLoop(e, rounds, ckpt, broadcastLabels)
+    val in = graft.operators.Iteration.stage(
+      edges.select(col("src"), col("dst")), "dst", ckpt,
+      repartition = prePartitionEdges)
+    val e = in.frame
+    in.run {
+      var labels = ckpt(e.select(col("dst").as("node")).distinct()
+        .select(col("node"), col("node").as("label")))
+      // rounds plan without AQE (the Iteration.withoutAdaptive lever:
+      // fixed round count, fixed shape, width already derived — paired
+      // numbers in BENCH_NOTES.md §Round 16)
+      for (_ <- 1 to rounds) labels =
+        graft.operators.Iteration.withoutAdaptive(spark)(
+          ckpt(lpaRound(e, labels, broadcastLabels)))
+      labels
     }
   }
 
@@ -74,45 +92,5 @@ object Communities {
       .agg(min(struct((-col("c")).as("nc"), col("label").as("l")))
         .as("m"))
       .select(col("src").as("node"), col("m.l").as("label"))
-  }
-
-  private def lpaLoop(e: DataFrame, rounds: Int,
-                      ckpt: DataFrame => DataFrame,
-                      broadcastLabels: Boolean): DataFrame = {
-    var labels = ckpt(e.select(col("dst").as("node")).distinct()
-      .select(col("node"), col("node").as("label")))
-    // rounds plan without AQE (the Iteration.withoutAdaptive lever:
-    // fixed round count, fixed shape, width already derived — paired
-    // numbers in BENCH_NOTES.md §Round 16)
-    for (_ <- 1 to rounds) labels =
-      graft.operators.Iteration.withoutAdaptive(e.sparkSession)(
-        ckpt(lpaRound(e, labels, broadcastLabels)))
-    labels
-  }
-
-  /** [[labelPropagation]] over a dst-BUCKETED edge table
-    * ([[graft.graph.Routing.stageEdgesTable]] with dst as the bucket
-    * key) — the frontier-family at-rest mode (r15/r19 doctrine): the
-    * O(E) side of every round's label join reads the bucket layout from
-    * the metastore and never exchanges, round after round; only the
-    * V-scale label frame and the candidate aggregates move. The scan is
-    * PERSISTED for the loop's lifetime (InMemoryRelation keeps the
-    * bucketed outputPartitioning, so the elision survives caching — the
-    * r19 lesson: without it, `rounds` re-decodes of the edge parquet eat
-    * the win). Rounds plan AT the bucket width; identical labels to
-    * [[labelPropagation]] (CommunitiesSpec pins equality and the
-    * exchange count).
-    */
-  def labelPropagationOnTable(spark: org.apache.spark.sql.SparkSession,
-                              table: String, rounds: Int,
-                              checkpointDir: Option[String] = None)
-      : DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val e = spark.table(table).select(col("src"), col("dst")).persist()
-    val parts = e.rdd.getNumPartitions
-    try graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      lpaLoop(e, rounds, ckpt, broadcastLabels = false)
-    } finally e.unpersist(blocking = false)
   }
 }

@@ -201,7 +201,7 @@ object Ranking {
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
     // persisted for the loop — InMemoryRelation keeps the bucketed
     // outputPartitioning and the rounds stop re-decoding the parquet
-    // (the Routing.earliestArrivalOnTables lesson)
+    // (the r19 lesson; see graft.operators.Iteration.stage)
     val ew = spark.table(table).persist() // (src, dst, od), bucketed by src
     val nodes = ckpt(
       ew.select(col("src").as("node"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.geo
+import graft.operators.Iteration
 
 /** Pillar P4 — the in-repo routing query surface (index.html:95-253):
   * graph construction from per-route ordered stops (G1/W9), nearest-node
@@ -18,6 +19,12 @@ import graft.functions.geo
   * [[graft.operators.Iteration.materializer]]). At cluster scale the
   * frontier join partitions by node id — the standard Pregel layout — and
   * rounds are bounded by the graph diameter.
+  *
+  * Each loop has ONE entry point, and its input frame picks the layout
+  * ([[graft.operators.Iteration.stage]]): a frame over a table bucketed
+  * on the round's join key ([[stageEdgesTable]],
+  * [[stageStopTimesTables]]) is read at rest and never shuffles in a
+  * round; any other frame is staged in memory.
   */
 object Routing {
 
@@ -52,6 +59,17 @@ object Routing {
     * (node, dist_m, prev, prev_route) for every reachable node. `maxIter`
     * bounds rounds (graph diameter suffices); convergence is detected via
     * an improvement count so it exits early.
+    *
+    * `edges` chooses the layout the loop runs on
+    * ([[graft.operators.Iteration.stage]]): a frame over a src-bucketed
+    * edge table ([[stageEdgesTable]]) is read at rest, so the O(E) side
+    * of every round's expansion join never shuffles, no matter how large
+    * V grows — a checkpoint cannot promise that (AQE checkpoints drop
+    * outputPartitioning; PlanSpec pins it) and `broadcastFrontier` buys
+    * the same elision only under a V-fits-in-memory contract. Any other
+    * frame is staged in memory, pre-partitioned on src (see [[bfsHops]]
+    * for the rationale, the measured r03/r04 numbers and when to pass
+    * `prePartitionEdges = false`).
     */
   def sssp(edges: DataFrame, sourceId: Any, maxIter: Int = 50,
            warnOnTruncation: Boolean = true,
@@ -59,31 +77,14 @@ object Routing {
            prePartitionEdges: Boolean = true,
            broadcastFrontier: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
     // default localCheckpoint, not cache: reused every round, freed with
     // the result by the ContextCleaner instead of pinning a CacheManager
     // entry; checkpointDir switches every round to reliable checkpoints
     // (executor loss mid-iteration survives — the cluster deployment mode)
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    // Pre-partitioned on the per-round join key — see bfsHops for the
-    // rationale and the measured r03/r04 numbers; same loop shape here.
-    val eSel = edges.select(col("src"), col("dst"), col("route_id"),
-      col("weight_m").cast("double"))
-    val e0 = ckpt(if (prePartitionEdges) eSel.repartition(col("src")) else eSel)
-    // rounds plan under an edge-count-derived partition count (e0 is
-    // materialized, so the count is one cheap job); in broadcast-frontier
-    // mode the per-round width is e0's RDD partition count, so the frame
-    // also narrows by zero-copy coalesce — the same lever (and measured
-    // adjudication) as Ranking.loop / Communities; see
-    // Iteration.roundPartitions.
-    // prePartitionEdges = false is the caller's one-partition-graph
-    // signal (see bfsHops doc) — skip the count job there: the lever
-    // would derive parts = 1 for a frame that already plans tiny.
-    val parts =
-      if (prePartitionEdges)
-        graft.operators.Iteration.roundPartitions(spark, e0.count())
-      else spark.sessionState.conf.numShufflePartitions
-    val e = if (parts < e0.rdd.getNumPartitions) e0.coalesce(parts) else e0
+    val ckpt = Iteration.materializer(spark, checkpointDir)
+    val in = Iteration.stage(edges.select(col("src"), col("dst"),
+        col("route_id"), col("weight_m").cast("double")), "src", ckpt,
+      repartition = prePartitionEdges, sized = prePartitionEdges)
     // Delta/frontier iteration: each round relaxes only edges out of nodes
     // improved in the previous round, not the whole settled set — at scale
     // the frontier is a vanishing fraction of V once the wave passes, and
@@ -114,8 +115,21 @@ object Routing {
     //     shuffle volume, which outweighs the saved merge+checkpoint
     //     whenever the frontier join carries real data — and shuffle
     //     volume, not round count, dominates at 100 TB.
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      ssspLoop(e, sourceId, maxIter, warnOnTruncation, ckpt, broadcastFrontier)
+    // node ids are whatever type the caller's edge frame uses (string
+    // route graphs, long-encoded trade graphs — integer keys shuffle and
+    // hash measurably cheaper at fact scale); `prev` must match it, so
+    // its typed null is derived from the source literal itself
+    val nullNode = when(lit(false), lit(sourceId))
+    val init = spark.range(1)
+      .select(lit(sourceId).as("node"), lit(0.0).as("dist_m"),
+        nullNode.as("prev"),
+        lit(null).cast("string").as("prev_route"),
+        lit(true).as("__new"))
+    in.run {
+      Iteration.frontierFixpoint(init,
+        (dist, frontier) =>
+          ssspRound(in.frame, dist, frontier, broadcastFrontier),
+        maxIter, warnOnTruncation, "sssp", ckpt, in.tinyBound)
     }
   }
 
@@ -149,64 +163,14 @@ object Routing {
         improved.as("__new"))
   }
 
-  private def ssspLoop(e: DataFrame, sourceId: Any, maxIter: Int,
-                       warnOnTruncation: Boolean,
-                       ckpt: DataFrame => DataFrame,
-                       broadcastFrontier: Boolean,
-                       tinyBound: Int =
-                         graft.operators.Iteration.TinyStateBound)
-      : DataFrame = {
-    val spark = e.sparkSession
-    // node ids are whatever type the caller's edge frame uses (string
-    // route graphs, long-encoded trade graphs — integer keys shuffle and
-    // hash measurably cheaper at fact scale); `prev` must match it, so
-    // its typed null is derived from the source literal itself
-    val nullNode = when(lit(false), lit(sourceId))
-    val init = spark.range(1)
-      .select(lit(sourceId).as("node"), lit(0.0).as("dist_m"),
-        nullNode.as("prev"),
-        lit(null).cast("string").as("prev_route"),
-        lit(true).as("__new"))
-    graft.operators.Iteration.frontierFixpoint(init,
-      (dist, frontier) => ssspRound(e, dist, frontier, broadcastFrontier),
-      maxIter, warnOnTruncation, "sssp", ckpt, tinyBound)
-  }
-
   /** Stage an edge frame as a src-BUCKETED (and src-sorted) managed
-    * table — the cluster deployment layout for the frontier loops
-    * ([[bfsHopsOnTable]]/[[ssspOnTable]]; the Ranking.pageRankOnTable
-    * doctrine). Columns are written as given: (src, dst) suffices for
-    * BFS; SSSP also needs route_id and weight_m.
+    * table — the at-rest layout [[bfsHops]] and [[sssp]] read without a
+    * per-round edge shuffle when handed `spark.table(table)` (the
+    * Ranking.pageRankOnTable doctrine). Columns are written as given:
+    * (src, dst) suffices for BFS; SSSP also needs route_id and weight_m.
     */
   def stageEdgesTable(edges: DataFrame, table: String, buckets: Int): Unit =
     graft.sources.Warehouse.writeBucketed(edges, table, "src", buckets)
-
-  /** [[sssp]] over a src-bucketed edge table ([[stageEdgesTable]]): the
-    * O(E) side of every round's expansion join reads the bucket layout
-    * straight from the metastore and NEVER shuffles, round after round,
-    * no matter how large V grows — a checkpoint cannot promise that (AQE
-    * checkpoints drop outputPartitioning; PlanSpec pins it) and the
-    * broadcast-frontier mode buys the same elision only under a
-    * V-fits-in-memory contract. Rounds plan AT the bucket width: a
-    * smaller count would re-exchange the frontier side against the fixed
-    * bucket partitioning every round (the r08 lesson), and coalescing
-    * the table would strip the layout. Identical semantics to [[sssp]]
-    * (RoutingSpec pins the equality).
-    */
-  def ssspOnTable(spark: SparkSession, table: String, sourceId: Any,
-                  maxIter: Int = 50, warnOnTruncation: Boolean = true,
-                  checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    // persisted for the loop — see bfsHopsOnTable (the r19 lesson)
-    val e = spark.table(table).select(col("src"), col("dst"),
-      col("route_id"), col("weight_m").cast("double")).persist()
-    val parts = e.rdd.getNumPartitions
-    try graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      ssspLoop(e, sourceId, maxIter, warnOnTruncation, ckpt,
-        broadcastFrontier = false,
-        tinyBound = 0) // bucketed face: keep the classic shape (see r19)
-    } finally e.unpersist(blocking = false)
-  }
 
   /** G4 path rows, fully distributed: backtrack the predecessor chain from
     * the target with an iterative broadcast join against the settled
@@ -218,8 +182,7 @@ object Routing {
   def shortestPathFrame(edges: DataFrame, sourceId: String, targetId: String,
                         maxIter: Int = 50,
                         checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = graft.operators.Iteration.materializer(
-      edges.sparkSession, checkpointDir)
+    val ckpt = Iteration.materializer(edges.sparkSession, checkpointDir)
     val dist = sssp(edges, sourceId, maxIter,
       checkpointDir = checkpointDir) // already materialized per round
     var path = ckpt(dist.filter(col("node") === targetId))
@@ -286,33 +249,24 @@ object Routing {
               prePartitionEdges: Boolean = true,
               broadcastFrontier: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
-    import spark.implicits._
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    // Pre-partition the edge frame on the per-round join key before
-    // materializing. Measured at sf0.1 (paired 7-pass mins, same host):
-    // r03 3.60→3.05 s, r04 3.85→3.53 s. The mechanism is PHYSICAL
-    // LAYOUT/BALANCE, not exchange elision: under AQE, Dataset
+    val ckpt = Iteration.materializer(spark, checkpointDir)
+    // In memory, the edge frame is pre-partitioned on the per-round join
+    // key before materializing. Measured at sf0.1 (paired 7-pass mins,
+    // same host): r03 3.60→3.05 s, r04 3.85→3.53 s. The mechanism is
+    // PHYSICAL LAYOUT/BALANCE, not exchange elision: under AQE, Dataset
     // checkpoints drop outputPartitioning (PlanSpec pins this), so each
     // round's join still plans its own exchanges — but the hash-grouped,
     // evenly spread blocks keep every round's shuffle map stage balanced.
-    // True per-round exchange elision at cluster scale comes from writing
-    // the edge frame src-bucketed and letting bucketed SMJ pin the O(E)
-    // side — then only the frontier shuffles: that mode EXISTS as
-    // [[stageEdgesTable]] + [[bfsHopsOnTable]]/[[ssspOnTable]] (r15).
-    // `prePartitionEdges = false` is for graphs that fit in one partition
-    // (r01/r02's 25-node synthetic: the layout's per-round task fan-out
-    // costs more than every frontier join combined — r02 0.95→1.33 s).
-    val eSel = edges.select(col("src"), col("dst"))
-    val e0 = ckpt(if (prePartitionEdges) eSel.repartition(col("src")) else eSel)
-    // edge-count-derived round partitions + zero-copy narrow — see sssp
-    // prePartitionEdges = false is the caller's one-partition-graph
-    // signal (see bfsHops doc) — skip the count job there: the lever
-    // would derive parts = 1 for a frame that already plans tiny.
-    val parts =
-      if (prePartitionEdges)
-        graft.operators.Iteration.roundPartitions(spark, e0.count())
-      else spark.sessionState.conf.numShufflePartitions
-    val e = if (parts < e0.rdd.getNumPartitions) e0.coalesce(parts) else e0
+    // True per-round exchange elision at cluster scale comes from a
+    // src-bucketed edge table ([[stageEdgesTable]]) handed in as `edges`:
+    // the bucketed SMJ pins the O(E) side and only the frontier shuffles
+    // (r15). `prePartitionEdges = false` is for graphs that fit in one
+    // partition (r01/r02's 25-node synthetic: the layout's per-round task
+    // fan-out costs more than every frontier join combined — r02
+    // 0.95→1.33 s); it also skips the count job, which would derive one
+    // round partition for a frame that already plans tiny.
+    val in = Iteration.stage(edges.select(col("src"), col("dst")), "src",
+      ckpt, repartition = prePartitionEdges, sized = prePartitionEdges)
     // Frontier BFS: in an unweighted graph a node's first discovery is its
     // final hop count, so each round only expands last round's discoveries.
     // Empty frontier = convergence. Per-round shuffle is
@@ -321,8 +275,14 @@ object Routing {
     // no anti-join is needed) and is checkpointed once per round — the
     // frontier is a filter over that checkpoint, not a second
     // materialization (see sssp).
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      bfsLoop(e, sourceId, maxIter, warnOnTruncation, ckpt, broadcastFrontier)
+    val init = spark.range(1)
+      .select(lit(sourceId).as("node"), lit(0).as("hops"),
+        lit(true).as("__new"))
+    in.run {
+      Iteration.frontierFixpoint(init,
+        (dist, frontier) =>
+          bfsRound(in.frame, dist, frontier, broadcastFrontier),
+        maxIter, warnOnTruncation, "bfsHops", ckpt, in.tinyBound)
     }
   }
 
@@ -341,45 +301,6 @@ object Routing {
       .select(col("node"),
         coalesce(col("hops"), col("cand_hops")).as("hops"),
         col("hops").isNull.as("__new"))
-  }
-
-  private def bfsLoop(e: DataFrame, sourceId: Any, maxIter: Int,
-                      warnOnTruncation: Boolean,
-                      ckpt: DataFrame => DataFrame,
-                      broadcastFrontier: Boolean,
-                      tinyBound: Int =
-                        graft.operators.Iteration.TinyStateBound)
-      : DataFrame = {
-    val spark = e.sparkSession
-    val init = spark.range(1)
-      .select(lit(sourceId).as("node"), lit(0).as("hops"),
-        lit(true).as("__new"))
-    graft.operators.Iteration.frontierFixpoint(init,
-      (dist, frontier) => bfsRound(e, dist, frontier, broadcastFrontier),
-      maxIter, warnOnTruncation, "bfsHops", ckpt, tinyBound)
-  }
-
-  /** [[bfsHops]] over a src-bucketed edge table ([[stageEdgesTable]]) —
-    * the O(E) expansion side never shuffles per round; only the frontier
-    * does. See [[ssspOnTable]] for the full contract (bucket-width
-    * planning, why neither a checkpoint nor broadcast-frontier
-    * substitutes at unbounded V).
-    */
-  def bfsHopsOnTable(spark: SparkSession, table: String, sourceId: Any,
-                     maxIter: Int, warnOnTruncation: Boolean = true,
-                     checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    // persisted for the loop's lifetime: InMemoryRelation preserves the
-    // bucketed outputPartitioning (elisions survive the cache) and the
-    // loop otherwise re-decodes the edge parquet once per round — the
-    // earliestArrivalOnTables lesson (r19: 10.4 → 6.8 s at sf1)
-    val e = spark.table(table).select(col("src"), col("dst")).persist()
-    val parts = e.rdd.getNumPartitions
-    try graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      bfsLoop(e, sourceId, maxIter, warnOnTruncation, ckpt,
-        broadcastFrontier = false,
-        tinyBound = 0) // bucketed face: keep the classic shape (see r19)
-    } finally e.unpersist(blocking = false)
   }
 
   /** G6 — in-engine journey planning: RAPTOR-shape EARLIEST ARRIVAL over
@@ -416,33 +337,58 @@ object Routing {
     * pins the equality).
     *
     * Scale shape: stop_times is the fact table; each round shuffles on
-    * stop then trip — both real keys, no driver state. The O(stop_times)
-    * side re-joins per round exactly like BFS's edge frame: when rounds
-    * dominate, use [[stageStopTimesTables]] + [[earliestArrivalOnTables]]
-    * (the at-rest remedy — dual stop-/trip-bucketed layouts, only
-    * round-output-sized frames shuffle per round).
+    * stop then trip — both real keys, no driver state. In memory, the
+    * O(stop_times) side re-joins per round exactly like BFS's edge frame;
+    * when rounds dominate, stage the timetable at rest
+    * ([[stageStopTimesTables]]) and pass the stop-bucketed copy as
+    * `stopTimes` and the trip-bucketed one as `byTrip`: each round's
+    * board join then reads the first and its ride join the second
+    * straight from the metastore, so NEITHER O(stop_times) side ever
+    * shuffles — only the frontier, the boarded-trip minima and the
+    * candidate arrivals (all round-output-sized) move. The in-memory
+    * loop re-exchanges the full timetable TWICE per round; at a 100 TB
+    * feed with ~60 rounds that is ~120 fact-table shuffles the at-rest
+    * layout deletes. The layout is read from the two frames
+    * ([[graft.operators.Iteration.stage]]): a `stopTimes` that is not
+    * stop-bucketed, or a `byTrip` that is not trip-bucketed, stages
+    * `stopTimes` in memory. Identical labels either way (RoutingSpec
+    * pins equality and the per-round exchange count).
     */
   def earliestArrival(stopTimes: DataFrame, sourceStop: Any, depTime: Long,
                       maxRounds: Int = 15, warnOnTruncation: Boolean = true,
                       checkpointDir: Option[String] = None,
                       transfers: Option[DataFrame] = None,
-                      broadcastTransfers: Boolean = true): DataFrame = {
+                      broadcastTransfers: Boolean = true,
+                      byTrip: Option[DataFrame] = None): DataFrame = {
     val spark = stopTimes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val st0 = ckpt(stopTimes.select(col("trip"), col("seq").cast("int"),
-      col("stop"), col("arr").cast("long"), col("dep").cast("long")))
-    val parts = graft.operators.Iteration.roundPartitions(spark, st0.count())
-    val st = if (parts < st0.rdd.getNumPartitions) st0.coalesce(parts) else st0
+    val ckpt = Iteration.materializer(spark, checkpointDir)
+    val in = stageTimetable(stopTimes, byTrip, ckpt)
+    val stRide = in.copy.fold(in.frame)(in.keep)
     // materialized once: re-planned per round, and a broadcast side is
     // rebuilt from it each round — keep that a cached-block read
     val xfer = stageTransfers(ckpt, transfers)
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      frontierFixpoint(raptorInit(spark, sourceStop, depTime),
-        (state, frontier) =>
-          raptorRound(st, state, frontier, xfer, broadcastTransfers),
-        maxRounds, warnOnTruncation, "earliestArrival", ckpt)
+    in.run {
+      Iteration.frontierFixpoint(raptorInit(spark, sourceStop, depTime),
+        (state, frontier) => raptorRoundOn(in.frame, stRide, state,
+          frontier, xfer, broadcastTransfers),
+        maxRounds, warnOnTruncation, "earliestArrival", ckpt, in.tinyBound)
     }
   }
+
+  /** Stage a timetable for a RAPTOR-family loop: the board side
+    * (trip, seq, stop, arr, dep) keyed on stop, plus the ride side
+    * (trip, seq, stop, arr) of a trip-bucketed copy when one is given —
+    * read at rest when the first is stop-bucketed and the copy, if any,
+    * trip-bucketed.
+    */
+  private def stageTimetable(stopTimes: DataFrame, byTrip: Option[DataFrame],
+                             ckpt: DataFrame => DataFrame)
+      : Iteration.LoopInput =
+    Iteration.stage(stopTimes.select(col("trip"), col("seq").cast("int"),
+        col("stop"), col("arr").cast("long"), col("dep").cast("long")),
+      "stop", ckpt, copy = byTrip.map(t => t.select(col("trip"),
+        col("seq").cast("int"), col("stop"), col("arr").cast("long")) ->
+        "trip"))
 
   /** Stage a transfers frame for a loop (one materialization, normalized
     * columns) — shared by every RAPTOR-family entry point.
@@ -479,7 +425,9 @@ object Routing {
 
   /** Stage a timetable as TWO bucketed at-rest layouts — stop-bucketed
     * (the board join's key) and trip-bucketed (the ride join's key) —
-    * for [[earliestArrivalOnTables]]. RAPTOR's serial data structures
+    * that [[earliestArrival]] and [[paretoJourneys]] read at rest when
+    * handed `spark.table(stopTable)` and `byTrip =
+    * Some(spark.table(tripTable))`. RAPTOR's serial data structures
     * are exactly this dual layout (Delling et al. 2012 §4: a
     * routes-ordered array for riding and a stops-ordered array for
     * boarding); the distributed counterpart is one fact table stored
@@ -497,59 +445,6 @@ object Routing {
     graft.sources.Warehouse.writeBucketed(
       st.select(col("trip"), col("seq"), col("stop"), col("arr")),
       tripTable, "trip", buckets)
-  }
-
-  /** [[earliestArrival]] over the dual bucketed layout
-    * ([[stageStopTimesTables]]): each round's board join reads the
-    * stop-bucketed copy and its ride join the trip-bucketed copy
-    * straight from the metastore, so NEITHER O(stop_times) side ever
-    * shuffles — only the frontier, the boarded-trip minima, and the
-    * candidate arrivals (all round-output-sized) move per round. The
-    * in-memory loop re-exchanges the full timetable TWICE per round
-    * (once on stop, once on trip); at a 100 TB feed with ~60 rounds
-    * that is ~120 fact-table shuffles this variant deletes. Rounds plan
-    * AT the bucket width (the r08 lesson); identical semantics to
-    * [[earliestArrival]] (RoutingSpec pins equality and the per-round
-    * exchange count).
-    */
-  def earliestArrivalOnTables(spark: SparkSession, stopTable: String,
-                              tripTable: String, sourceStop: Any,
-                              depTime: Long, maxRounds: Int = 15,
-                              warnOnTruncation: Boolean = true,
-                              checkpointDir: Option[String] = None,
-                              transfers: Option[DataFrame] = None,
-                              broadcastTransfers: Boolean = true)
-      : DataFrame = {
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    // persist BOTH layouts for the loop's lifetime: InMemoryRelation
-    // preserves the bucketed scan's outputPartitioning (so every
-    // exchange the layout elides stays elided), and ~60 rounds re-read
-    // each side once per round — without the cache that is ~120 parquet
-    // decodes of the fact table (measured: r19 sf1 10.4 → 6.8 s).
-    // MEMORY_AND_DISK (the default) keeps this scale-sane: what doesn't
-    // fit executor memory spills to local disk, the same residency
-    // class as the in-memory loop's localCheckpoint of the same table.
-    val stBoard = spark.table(stopTable)
-      .select(col("trip"), col("seq"), col("stop"), col("arr"), col("dep"))
-      .persist()
-    val stRide = spark.table(tripTable)
-      .select(col("trip"), col("seq"), col("stop"), col("arr"))
-      .persist()
-    val parts = stBoard.rdd.getNumPartitions
-    val xfer = stageTransfers(ckpt, transfers)
-    try graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      // the loop materializes every round (ckpt), so nothing returned
-      // still depends on the cached scans
-      frontierFixpoint(raptorInit(spark, sourceStop, depTime),
-        (state, frontier) =>
-          raptorRoundOn(stBoard, stRide, state, frontier, xfer,
-            broadcastTransfers),
-        maxRounds, warnOnTruncation, "earliestArrivalOnTables", ckpt,
-        tinyBound = 0) // bucketed face: tiny mode measured slower (r19/r23)
-    } finally {
-      stBoard.unpersist(blocking = false)
-      stRide.unpersist(blocking = false)
-    }
   }
 
   /** The full RAPTOR output [[earliestArrival]] collapses: the PARETO
@@ -576,17 +471,14 @@ object Routing {
                      transfers: Option[DataFrame] = None,
                      broadcastTransfers: Boolean = true): DataFrame = {
     val spark = stopTimes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val st0 = ckpt(stopTimes.select(col("trip"), col("seq").cast("int"),
-      col("stop"), col("arr").cast("long"), col("dep").cast("long")))
-    val parts = graft.operators.Iteration.roundPartitions(spark, st0.count())
-    val st = if (parts < st0.rdd.getNumPartitions) st0.coalesce(parts) else st0
+    val ckpt = Iteration.materializer(spark, checkpointDir)
+    val in = stageTimetable(stopTimes, None, ckpt)
     // With transfers, a round relaxes one boarding OR one footpath from
     // the frontier, so `rounds` counts legs (boardings + footpath hops),
     // an upper bound on boardings — still a monotone effort axis for the
     // Pareto front, and exactly boardings when transfers is None.
     val xfer = stageTransfers(ckpt, transfers)
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    in.run {
       val slices = scala.collection.mutable.ListBuffer(
         spark.range(1).select(lit(sourceStop).as("stop"),
           lit(0).as("rounds"), lit(depTime).as("arr_t")))
@@ -595,10 +487,10 @@ object Routing {
       // each slice is a narrow filter+project over that round's
       // materialized state (a LocalRelation in tiny mode, a checkpoint
       // otherwise) — recorded lazily, materialized once by the union
-      graft.operators.Iteration.frontierFixpoint(init,
-        (state, frontier) => raptorRound(st, state, frontier, xfer,
+      Iteration.frontierFixpoint(init,
+        (state, frontier) => raptorRound(in.frame, state, frontier, xfer,
           broadcastTransfers),
-        maxRounds, warnOnTruncation, "arrivalProfile", ckpt,
+        maxRounds, warnOnTruncation, "arrivalProfile", ckpt, in.tinyBound,
         perRound = (k, frontier) => slices += frontier
           .select(col("stop"), lit(k).as("rounds"), col("arr_t")))
       slices.reduce(_ unionByName _)
@@ -617,8 +509,8 @@ object Routing {
 
   /** One round over a (possibly dual-layout) timetable: `stBoard` is
     * probed on stop, `stRide` on trip — the in-memory loop passes the
-    * same frame twice; [[earliestArrivalOnTables]] passes the two
-    * bucketed copies so neither probe re-exchanges the fact table.
+    * same frame twice; a loop read at rest passes the two bucketed
+    * copies so neither probe re-exchanges the fact table.
     *
     * `transfers` — either pre-staged via [[stageTransfers]]
     * (from_stop, to_stop, mtt) or the raw GTFS transfers.txt type-2
@@ -699,76 +591,36 @@ object Routing {
     * per-stop front is bounded by the tariff's distinct accumulated
     * fares, which a flat per-boarding tariff bounds by fare levels ×
     * useful boardings. The prune is a per-stop window (sort + running
-    * min), no self-join.
+    * min), no self-join. The at-rest layout of [[earliestArrival]]
+    * applies unchanged: with the stop-bucketed copy as `stopTimes` and
+    * the trip-bucketed one as `byTrip`, neither O(stop_times) side
+    * shuffles per round and only label-set-sized frames move.
     */
   def paretoJourneys(stopTimes: DataFrame, tripFares: DataFrame,
                      sourceStop: Any, depTime: Long,
                      maxRounds: Int = 15, warnOnTruncation: Boolean = true,
                      checkpointDir: Option[String] = None,
                      transfers: Option[DataFrame] = None,
-                     broadcastTransfers: Boolean = true): DataFrame = {
+                     broadcastTransfers: Boolean = true,
+                     byTrip: Option[DataFrame] = None): DataFrame = {
     val spark = stopTimes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val st0 = ckpt(stopTimes.select(col("trip"), col("seq").cast("int"),
-      col("stop"), col("arr").cast("long"), col("dep").cast("long")))
-    val parts = graft.operators.Iteration.roundPartitions(spark, st0.count())
-    val st = if (parts < st0.rdd.getNumPartitions) st0.coalesce(parts) else st0
+    val ckpt = Iteration.materializer(spark, checkpointDir)
+    val in = stageTimetable(stopTimes, byTrip, ckpt)
     // fares join the ride side ONCE, before the loop — a per-round
-    // tripFares join would re-exchange the O(trips) tariff every round
-    val rideF = ckpt(st.join(
+    // tripFares join would re-exchange the O(trips) tariff every round.
+    // At rest the join keeps the trip-bucketed copy's partitioning and
+    // the persist preserves it, so the per-round ride join stays
+    // exchange-free on the fact side.
+    val rideF = in.keep(in.copy.getOrElse(in.frame).join(
       tripFares.select(col("trip"), col("fare").cast("long")), Seq("trip")))
     val xfer = stageTransfers(ckpt, transfers)
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      frontierFixpoint(paretoInit(spark, sourceStop, depTime),
-        (state, frontier) => paretoRoundOn(st, rideF, state, frontier,
+    in.run {
+      Iteration.frontierFixpoint(paretoInit(spark, sourceStop, depTime),
+        (state, frontier) => paretoRoundOn(in.frame, rideF, state, frontier,
           xfer, broadcastTransfers),
         maxRounds, warnOnTruncation, "paretoJourneys", ckpt,
-        tinyBound = 0) // label-set rounds: tiny mode measured slower (r31)
-    }
-  }
-
-  /** [[paretoJourneys]] over the SAME dual bucketed layout
-    * [[stageStopTimesTables]] writes for [[earliestArrivalOnTables]] —
-    * the board probe reads the stop-bucketed copy, the ride probe the
-    * trip-bucketed one (fares joined onto it ONCE, inheriting the trip
-    * partitioning through the persist), so neither O(stop_times) side
-    * shuffles per round; only label-set-sized frames move (the r19/r23
-    * lever, label sets instead of scalars). Identical semantics to the
-    * in-memory loop (RoutingSpec pins equality).
-    */
-  def paretoJourneysOnTables(spark: SparkSession, stopTable: String,
-                             tripTable: String, tripFares: DataFrame,
-                             sourceStop: Any, depTime: Long,
-                             maxRounds: Int = 15,
-                             warnOnTruncation: Boolean = true,
-                             checkpointDir: Option[String] = None,
-                             transfers: Option[DataFrame] = None,
-                             broadcastTransfers: Boolean = true)
-      : DataFrame = {
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val stBoard = spark.table(stopTable)
-      .select(col("trip"), col("seq"), col("stop"), col("arr"), col("dep"))
-      .persist()
-    // one tariff shuffle against the bucketed layout, before the loop;
-    // the SMJ keeps the left side's trip partitioning and the persist
-    // preserves it, so the per-round ride join stays exchange-free on
-    // the fact side
-    val stRideF = spark.table(tripTable)
-      .select(col("trip"), col("seq"), col("stop"), col("arr"))
-      .join(tripFares.select(col("trip"), col("fare").cast("long")),
-        Seq("trip"))
-      .persist()
-    val parts = stBoard.rdd.getNumPartitions
-    val xfer = stageTransfers(ckpt, transfers)
-    try graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      frontierFixpoint(paretoInit(spark, sourceStop, depTime),
-        (state, frontier) => paretoRoundOn(stBoard, stRideF, state,
-          frontier, xfer, broadcastTransfers),
-        maxRounds, warnOnTruncation, "paretoJourneysOnTables", ckpt,
-        tinyBound = 0) // label-set + bucketed: measured slower (r27/r32)
-    } finally {
-      stBoard.unpersist(blocking = false)
-      stRideF.unpersist(blocking = false)
+        tinyBound = 0) // label-set rounds: tiny mode measured slower in
+                       // memory (r31) and at rest (r27/r32)
     }
   }
 
@@ -776,32 +628,6 @@ object Routing {
                          depTime: Long): DataFrame =
     spark.range(1).select(lit(sourceStop).as("stop"),
       lit(depTime).as("arr_t"), lit(0L).as("fare"), lit(true).as("__new"))
-
-  /** The shared frontier-fixpoint driver every loop in this file runs —
-    * [[graft.operators.Iteration.frontierFixpoint]] (which carries the
-    * tiny-state fast path: sub-[[graft.operators.Iteration
-    * .TinyStateBound]] states live on the driver between rounds, one
-    * bounded take() per round instead of checkpoint + probe jobs;
-    * identical semantics, RoutingSpec pins equality across the mode
-    * boundary).
-    *
-    * `tinyBound` per call site follows the round-14 paired
-    * adjudication (BENCH_NOTES): the fast path WINS on simple
-    * in-memory rounds (bfs/sssp/raptor/profile — r16 −19%, r01/r22
-    * small wins) and LOSES 10–30% on label-set (pareto) rounds and on
-    * the bucketed OnTables faces (r23/r27/r31/r32/r19 regressed with
-    * it), so those pass 0 and keep the classic checkpoint shape.
-    */
-  private def frontierFixpoint(init: DataFrame,
-                               round: (DataFrame, DataFrame) => DataFrame,
-                               maxRounds: Int, warnOnTruncation: Boolean,
-                               name: String,
-                               ckpt: DataFrame => DataFrame,
-                               tinyBound: Int =
-                                 graft.operators.Iteration.TinyStateBound)
-      : DataFrame =
-    graft.operators.Iteration.frontierFixpoint(init, round, maxRounds,
-      warnOnTruncation, name, ckpt, tinyBound)
 
   /** One un-materialized bi-criteria round — package-visible for plan
     * pins (see [[ssspRound]]). `stRideFare` is the ride-side timetable
@@ -1048,8 +874,8 @@ object Routing {
       maxRounds * 8 + 16, warnOnTruncation = warnOnTruncation)
 
   /** [[journeyLegs]] from caller-supplied labels — bring the fixpoint
-    * from ANY face (the in-memory loop, [[earliestArrivalOnTables]]'
-    * bucketed loop, a persisted label table): the parent rule is a pure
+    * from ANY source ([[earliestArrival]] in memory or at rest, a
+    * persisted label table): the parent rule is a pure
     * function of (timetable, labels, rules), so the backtrack composes
     * with whichever loop computed them.
     */
@@ -1062,7 +888,7 @@ object Routing {
                             broadcastLabels: Boolean = true,
                             warnOnTruncation: Boolean = true): DataFrame = {
     val spark = stopTimes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
+    val ckpt = Iteration.materializer(spark, checkpointDir)
     val parents = ckpt(parentEvents(stopTimes, labels, sourceStop,
       transfers, broadcastTransfers, broadcastLabels))
     var path = ckpt(parents.filter(col("stop") === lit(destStop)))
@@ -1079,7 +905,7 @@ object Routing {
       path = path.unionByName(frontier)
       hops += 1
     }
-    graft.operators.Iteration.warnIfTruncated("journeyLegs", frontier,
+    Iteration.warnIfTruncated("journeyLegs", frontier,
       hops, maxHops, warnOnTruncation)
     // completeness check: a complete chain's FIRST leg departs from the
     // source. A dwell-degenerate feed (see journeyLegs caveat) or a
@@ -1138,7 +964,7 @@ object Routing {
 
   /** [[journeyForestLegs]] from caller-supplied labels — see
     * [[journeyLegsFromLabels]] (compose with the bucketed at-rest loop
-    * at fact scale: labels from [[earliestArrivalOnTables]], the parent
+    * at fact scale: labels from [[earliestArrival]] at rest, the parent
     * pass probing the same timetable with labels broadcast).
     */
   def journeyForestFromLabels(stopTimes: DataFrame, labels: DataFrame,
@@ -1150,7 +976,7 @@ object Routing {
                               maxHops: Int = 136,
                               broadcastLabels: Boolean = true): DataFrame = {
     val spark = stopTimes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
+    val ckpt = Iteration.materializer(spark, checkpointDir)
     val parents = ckpt(parentEvents(stopTimes, labels, sourceStop,
       transfers, broadcastTransfers, broadcastLabels))
     val legCols = Seq(col("kind"), col("from_stop"),
@@ -1164,11 +990,11 @@ object Routing {
     // round-17: loop-family treatment for the unroll loop (same change
     // and rationale as paretoJourneyForest — see that loop's comment;
     // paired numbers in OPTIMIZATION_r17.md §4)
-    val parts = graft.operators.Iteration.roundPartitions(
+    val parts = Iteration.roundPartitions(
       spark, parents.count())
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    Iteration.withShufflePartitions(spark, parts) {
       while (hops < maxHops && !frontier.isEmpty) {
-        ext = graft.operators.Iteration.withoutAdaptive(spark)(
+        ext = Iteration.withoutAdaptive(spark)(
           ckpt(frontier.join(parents,
               frontier("__cur") === parents("stop"))
             .select((col("dest") +: legCols)
@@ -1178,7 +1004,7 @@ object Routing {
         hops += 1
       }
     }
-    graft.operators.Iteration.warnIfTruncated("journeyForestLegs", frontier,
+    Iteration.warnIfTruncated("journeyForestLegs", frontier,
       hops, maxHops, warnOnTruncation)
     import org.apache.spark.sql.expressions.Window
     slices.reduce(_ unionByName _)
@@ -1190,7 +1016,7 @@ object Routing {
   }
 
   /** [[parentEvents]] lifted to LABEL SETS — itinerary reconstruction
-    * for the McRAPTOR faces ([[paretoJourneys]]): the canonical tight
+    * for the McRAPTOR loop ([[paretoJourneys]]): the canonical tight
     * predecessor of every front label (stop, arr_t, fare).
     *
     * Soundness (the domination argument, one step past the scalar
@@ -1315,8 +1141,8 @@ object Routing {
     * be left without a tight parent: its chain (and any chain through
     * it) truncates deterministically, identically replayed by an
     * oracle applying the same rule — the honest reading of provenance
-    * under a round budget. Labels from any [[paretoJourneys]] face;
-    * parents via [[paretoParentEvents]]; ancestor expansion keyed by
+    * under a round budget. Labels from [[paretoJourneys]] in either
+    * layout; parents via [[paretoParentEvents]]; ancestor expansion keyed by
     * the LABEL triple, rounds = max itinerary depth, total rows =
     * output size — the [[journeyForestFromLabels]] shape over label
     * space (O(front × depth), dimension-scale next to the timetable).
@@ -1331,7 +1157,7 @@ object Routing {
                           maxHops: Int = 136,
                           broadcastLabels: Boolean = true): DataFrame = {
     val spark = stopTimes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
+    val ckpt = Iteration.materializer(spark, checkpointDir)
     val parents = ckpt(paretoParentEvents(stopTimes, tripFares, front,
       sourceStop, depTime, transfers, broadcastTransfers,
       broadcastLabels))
@@ -1358,11 +1184,11 @@ object Routing {
     // AQE (one job per shuffle stage + driver re-planning gap per hop
     // is pure overhead on label-scale frames; SPARK_GRAFT_LOOP_AQE
     // re-enables). Paired numbers in OPTIMIZATION_r17.md §4.
-    val parts = graft.operators.Iteration.roundPartitions(
+    val parts = Iteration.roundPartitions(
       spark, parents.count())
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    Iteration.withShufflePartitions(spark, parts) {
       while (hops < maxHops && !frontier.isEmpty) {
-        ext = graft.operators.Iteration.withoutAdaptive(spark)(
+        ext = Iteration.withoutAdaptive(spark)(
           ckpt(frontier.join(parents,
               frontier("__cs") === parents("stop") &&
                 frontier("__ca") === parents("arr_t") &&
@@ -1375,7 +1201,7 @@ object Routing {
         hops += 1
       }
     }
-    graft.operators.Iteration.warnIfTruncated("paretoJourneyForest",
+    Iteration.warnIfTruncated("paretoJourneyForest",
       frontier, hops, maxHops, warnOnTruncation)
     import org.apache.spark.sql.expressions.Window
     slices.reduce(_ unionByName _)
@@ -1413,25 +1239,17 @@ object Routing {
     require(seeds.distinct.size == seeds.size, "seeds must be distinct")
     val spark = edges.sparkSession
     import spark.implicits._
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val eSel = edges.select(col("src"), col("dst"))
-    val e0 = ckpt(if (prePartitionEdges) eSel.repartition(col("src")) else eSel)
-    // edge-count-derived round partitions + zero-copy narrow — see sssp.
-    // The per-round frames here are |seeds|× the single-source case, but
-    // |seeds| is a bounded panel, so the edge frame stays the loop's
-    // largest and still sets the width.
-    // prePartitionEdges = false is the caller's one-partition-graph
-    // signal (see bfsHops doc) — skip the count job there: the lever
-    // would derive parts = 1 for a frame that already plans tiny.
-    val parts =
-      if (prePartitionEdges)
-        graft.operators.Iteration.roundPartitions(spark, e0.count())
-      else spark.sessionState.conf.numShufflePartitions
-    val e = if (parts < e0.rdd.getNumPartitions) e0.coalesce(parts) else e0
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
-      val init = seeds.map(s => (s, s, 0)).toDF("seed", "node", "hops")
-        .withColumn("__new", lit(true))
-      graft.operators.Iteration.frontierFixpoint(init,
+    val ckpt = Iteration.materializer(spark, checkpointDir)
+    // staged like bfsHops' edge frame. The per-round frames here are
+    // |seeds|× the single-source case, but |seeds| is a bounded panel,
+    // so the edge frame stays the loop's largest and still sets the width.
+    val in = Iteration.stage(edges.select(col("src"), col("dst")), "src",
+      ckpt, repartition = prePartitionEdges, sized = prePartitionEdges)
+    val e = in.frame
+    val init = seeds.map(s => (s, s, 0)).toDF("seed", "node", "hops")
+      .withColumn("__new", lit(true))
+    in.run {
+      Iteration.frontierFixpoint(init,
         (dist, frontier) => {
           val next = frontier.join(e, frontier("node") === e("src"))
             .select(col("seed"), e("dst").as("node"),
@@ -1442,7 +1260,8 @@ object Routing {
             .select(col("seed"), col("node"),
               coalesce(col("hops"), col("cand_hops")).as("hops"),
               col("hops").isNull.as("__new"))
-        }, maxIter, warnOnTruncation, "multiSourceBfsHops", ckpt)
+        }, maxIter, warnOnTruncation, "multiSourceBfsHops", ckpt,
+        in.tinyBound)
     }
   }
 }

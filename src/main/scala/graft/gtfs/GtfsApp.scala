@@ -35,6 +35,8 @@ object GtfsApp {
     */
   def run(spark: SparkSession, rootDir: String, outDir: String,
           lint: Boolean = false): Map[String, String] = {
+    // listed first: a missing source gtfs/ dir fails before any work
+    val passThrough = GtfsWriter.passThroughFiles(s"$rootDir/gtfs")
     val built = GtfsPipeline.build(spark, rootDir)
     // materialize each table once: the content hash and the CSV write
     // would otherwise each recompute the full per-relation pipeline
@@ -71,26 +73,13 @@ object GtfsApp {
     // tables (fares/transfers): the reference's `git diff --quiet` gate
     // covers the whole gtfs dir, so an edit to fare_rules.txt alone must
     // trigger a re-publish even when every generated table is unchanged
-    val passThroughHashes: Map[String, String] = {
-      val src = java.nio.file.Paths.get(rootDir, "gtfs")
-      if (!java.nio.file.Files.isDirectory(src)) Map.empty
-      else {
-        val stream = java.nio.file.Files.list(src)
-        try {
-          import scala.jdk.CollectionConverters._
-          stream.iterator().asScala
-            .filter(p => java.nio.file.Files.isRegularFile(p) &&
-              p.getFileName.toString.endsWith(".txt") &&
-              !GtfsWriter.FieldOrder.contains(p.getFileName.toString))
-            .map { p =>
-              val md = java.security.MessageDigest.getInstance("MD5")
-              s"file:${p.getFileName}" ->
-                md.digest(java.nio.file.Files.readAllBytes(p))
-                  .map("%02x".format(_)).mkString
-            }.toMap
-        } finally stream.close()
-      }
-    }
+    val passThroughHashes: Map[String, String] =
+      passThrough.map { p =>
+        val md = java.security.MessageDigest.getInstance("MD5")
+        s"file:${p.getFileName}" ->
+          md.digest(java.nio.file.Files.readAllBytes(p))
+            .map("%02x".format(_)).mkString
+      }.toMap
     val hashes = tables.map { case (n, df) =>
       n -> StreamingJobs.contentHash(df) } ++ passThroughHashes
     println(f"[gtfs]   content hashes ${(System.nanoTime() - tH) / 1e9}%.1f s")

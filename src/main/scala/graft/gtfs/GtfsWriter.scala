@@ -131,27 +131,36 @@ object GtfsWriter {
     }
   }
 
-  /** Copy the hand-maintained (non-generated) GTFS tables from the input
-    * feed dir into `outDir` — the reference zips its whole `gtfs/` dir
+  /** The hand-maintained (non-generated) GTFS tables of the input feed
+    * dir, sorted by name — the reference zips its whole `gtfs/` dir
     * (generate-gtfs.yml:40-43), so fare_attributes.txt / fare_rules.txt /
     * transfers.txt ship with every feed even though no script writes them.
-    * Generically: every `.txt` not in FieldOrder passes through.
+    * Generically: every `.txt` not in FieldOrder passes through. A
+    * missing dir fails, naming it: publishing without those tables would
+    * be a silent regression of the feed.
     */
-  def passThroughTables(srcGtfsDir: String, outDir: String): Seq[String] = {
+  def passThroughFiles(srcGtfsDir: String): Seq[java.nio.file.Path] = {
     val src = Paths.get(srcGtfsDir)
-    if (!Files.isDirectory(src)) return Seq.empty
-    val copied = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (!Files.isDirectory(src))
+      throw new java.io.FileNotFoundException(
+        s"GTFS source directory not found: $src")
     val stream = Files.list(src)
-    try stream.sorted().forEach { p =>
-      val n = p.getFileName.toString
-      if (Files.isRegularFile(p) && n.endsWith(".txt") && !FieldOrder.contains(n)) {
-        Files.copy(p, Paths.get(outDir, n),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        copied += n
-      }
+    try {
+      import scala.jdk.CollectionConverters._
+      stream.sorted().iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        Files.isRegularFile(p) && n.endsWith(".txt") && !FieldOrder.contains(n)
+      }.toList
     } finally stream.close()
-    copied.toSeq
   }
+
+  /** Copy [[passThroughFiles]] into `outDir`; returns their names. */
+  def passThroughTables(srcGtfsDir: String, outDir: String): Seq[String] =
+    passThroughFiles(srcGtfsDir).map { p =>
+      Files.copy(p, Paths.get(outDir, p.getFileName.toString),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      p.getFileName.toString
+    }
 
   /** K5: zip the written feed (driver-side, feed is one-file-per-table).
     * Only `.txt` tables are zipped — the feed dir may also hold the

@@ -462,9 +462,10 @@ object Dedup {
     // materializing — measured at sf0.1 (paired 7-pass mins): r04
     // 3.85→3.53 s. See Routing.bfsHops for the actual mechanism (layout
     // balance, NOT exchange elision — AQE checkpoints drop partitioning
-    // metadata, PlanSpec pins it), the cluster-scale bucketed-table
-    // alternative, and when to pass `prePartitionEdges = false`
-    // (one-partition graphs).
+    // metadata, PlanSpec pins it) and when to pass
+    // `prePartitionEdges = false` (one-partition graphs). There is no
+    // at-rest layout here: the symmetric edge frame is derived from the
+    // caller's pairs on every call.
     val eSym = if (pairsCanonical) sym else sym.distinct()
     val e0 = ckpt(if (prePartitionEdges) eSym.repartition(col("src")) else eSym)
     // edge-count-derived round partitions + zero-copy narrow — the same
@@ -534,39 +535,6 @@ object Dedup {
     }
     Iteration.warnIfTruncated("dupClusters", frontier, i, maxIter)
     labels.select(col("node").as("member"), col("label").as("cluster"))
-  }
-
-  /** Stage canonical pairs (DISTINCT, a < b) as a SYMMETRIZED src-bucketed
-    * edge table for [[dupClustersOnTable]] — the cluster deployment
-    * layout of the CC loop (Routing.stageEdgesTable doctrine).
-    */
-  def stageSymEdgesTable(pairs: DataFrame, table: String,
-                         buckets: Int): Unit = {
-    val p0 = pairs.select(col("a"), col("b"))
-    graft.sources.Warehouse.writeBucketed(
-      p0.select(col("a").as("src"), col("b").as("dst"))
-        .unionByName(p0.select(col("b").as("src"), col("a").as("dst"))),
-      table, "src", buckets)
-  }
-
-  /** [[dupClusters]] over a symmetric src-bucketed edge table
-    * ([[stageSymEdgesTable]]): the O(E) side of every round's expansion
-    * join reads the bucket layout from the metastore and never shuffles —
-    * the frontier-loop mode with NO V-fits-in-memory contract (contrast
-    * `broadcastFrontier`, whose peak frontier here is the full node
-    * set). Rounds plan AT the bucket width (the r08 lesson); identical
-    * label semantics to [[dupClusters]] (OperatorsSpec pins equality).
-    */
-  def dupClustersOnTable(spark: org.apache.spark.sql.SparkSession,
-                         table: String, maxIter: Int = 50,
-                         checkpointDir: Option[String] = None): DataFrame = {
-    val ckpt = Iteration.materializer(spark, checkpointDir)
-    // persisted for the loop — see Routing.bfsHopsOnTable (r19 lesson)
-    val e = spark.table(table).select(col("src"), col("dst")).persist()
-    val parts = e.rdd.getNumPartitions
-    try Iteration.withShufflePartitions(spark, parts) {
-      ccLoop(e, maxIter, ckpt, broadcastFrontier = false)
-    } finally e.unpersist(blocking = false)
   }
 
   /** INCREMENTAL corpus dedup: drop `increment` rows whose `keyCol` value

@@ -2,11 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared guard for frontier loops (Routing.sssp/bfsHops,
-  * Dedup.dupClusters): maxIter truncation with work left is otherwise
-  * indistinguishable from convergence. Callers that bound hops BY DESIGN
-  * (e.g. a query mirrored by a hop-bounded oracle) pass `enabled = false`
-  * so the one log line that matters isn't trained away.
+/** The one way a loop runs: [[stage]] lays out the loop input by the
+  * layout it arrives in (at rest in a bucketed table, or in memory),
+  * [[roundPartitions]] / [[withShufflePartitions]] / [[withoutAdaptive]]
+  * scope the rounds' planning, [[frontierFixpoint]] drives
+  * __new-flagged frontier rounds, [[materializer]] truncates lineage per
+  * round and [[warnIfTruncated]] reports a loop cut off with work left.
   */
 private[graft] object Iteration {
 
@@ -65,6 +66,91 @@ private[graft] object Iteration {
     // negative past ~2.8e14 rows, which would collapse the min to 1 and
     // break the "never caps real width below the session setting" promise
     math.max(1L, math.min(cur.toLong, rows / 131072L + 1)).toInt
+  }
+
+  /** A loop input staged by [[stage]]: the frame the rounds probe, the
+    * width they plan at, and whether the frame is read at rest from a
+    * bucketed table. `copy` is the input's second at-rest layout, if the
+    * loop was given one and reads at rest.
+    */
+  final class LoopInput private[Iteration] (val frame: DataFrame,
+                                            val parts: Int,
+                                            val atRest: Boolean,
+                                            val copy: Option[DataFrame],
+                                            ckpt: DataFrame => DataFrame) {
+    private val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    if (atRest) held += frame
+
+    /** [[frontierFixpoint]]'s tiny-state bound for this layout: classic
+      * rounds (0) at rest, where driver-local state measured 10–30%
+      * slower (the LocalRelation state side re-plans against the cached
+      * bucketed scans: r19/r23/r27/r32), [[TinyStateBound]] in memory.
+      */
+    def tinyBound: Int = if (atRest) 0 else TinyStateBound
+
+    /** Keep a frame derived from the input (the second layout, a side
+      * pre-joined before the loop) for the loop's lifetime, the way the
+      * input itself is kept: persisted at rest, since the cache keeps a
+      * bucketed scan's partitioning and so the exchanges the layout
+      * elides, and released after [[run]]; through `ckpt` in memory.
+      */
+    def keep(df: DataFrame): DataFrame =
+      if (atRest) { val p = df.persist(); held += p; p } else ckpt(df)
+
+    /** Run the rounds under [[parts]] shuffle partitions, then release
+      * what was persisted for them. The rounds materialize every state
+      * through `ckpt`, so what they return no longer reads the released
+      * caches.
+      */
+    def run[T](body: => T): T =
+      try withShufflePartitions(frame.sparkSession, parts)(body)
+      finally held.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Stage a loop's input by the layout it arrives in — the one place a
+    * loop's layout is chosen. `key` is the column the rounds join the
+    * input on.
+    *
+    *  - AT REST, when `input` is a projection or filter of one table
+    *    bucketed on `key` ([[graft.sources.Warehouse.bucketedOn]]) and
+    *    `copy`, if given, one of a table bucketed on its own key: the
+    *    scan is persisted for the loop's lifetime (InMemoryRelation keeps
+    *    the bucketed outputPartitioning, RoutingSpec pins it, so the
+    *    O(input) side of every round's join never exchanges; without the
+    *    cache every round re-decodes the parquet — r19 sf1 10.4 → 6.8 s).
+    *    MEMORY_AND_DISK spills what does not fit, the residency class of
+    *    the in-memory checkpoint. Rounds plan AT the bucket width: a
+    *    smaller count would re-exchange the other join side against the
+    *    fixed bucket partitioning every round (the r08 lesson), and a
+    *    coalesce would strip the layout.
+    *  - IN MEMORY, for any other frame (a merely repartitioned one
+    *    included): `ckpt`, first hash-partitioned on `key` when
+    *    `repartition`, rounds at [[roundPartitions]] of its row count and
+    *    the frame narrowed to that width by a zero-copy coalesce.
+    *    `sized = false` skips the count job and keeps the session width
+    *    (the edge loops' one-partition-graph signal,
+    *    `prePartitionEdges = false`). The staged frame serves every join
+    *    key, so `copy` goes unused.
+    *
+    * Choosing reads the analyzed plans only and launches no job.
+    */
+  def stage(input: DataFrame, key: String, ckpt: DataFrame => DataFrame,
+            repartition: Boolean = false, sized: Boolean = true,
+            copy: Option[(DataFrame, String)] = None): LoopInput = {
+    val spark = input.sparkSession
+    val atRest = graft.sources.Warehouse.bucketedOn(input, key) &&
+      copy.forall { case (c, k) => graft.sources.Warehouse.bucketedOn(c, k) }
+    if (atRest) {
+      val e = input.persist()
+      new LoopInput(e, e.rdd.getNumPartitions, true, copy.map(_._1), ckpt)
+    } else {
+      val e0 = ckpt(if (repartition) input.repartition(col(key)) else input)
+      val parts =
+        if (sized) roundPartitions(spark, e0.count())
+        else spark.sessionState.conf.numShufflePartitions
+      val e = if (parts < e0.rdd.getNumPartitions) e0.coalesce(parts) else e0
+      new LoopInput(e, parts, false, None, ckpt)
+    }
   }
 
   /** Run `body` (a loop's rounds) under `n` shuffle partitions, then
@@ -138,7 +224,11 @@ private[graft] object Iteration {
     try body finally spark.conf.set(key, old)
   }
 
-  /** The frontier is localCheckpoint'd at every call site, so the
+  /** maxIter truncation with work left is otherwise indistinguishable
+    * from convergence, so it logs a warning. Callers that bound hops BY
+    * DESIGN (e.g. a query mirrored by a hop-bounded oracle) pass
+    * `enabled = false` so the one log line that matters isn't trained
+    * away. The frontier is localCheckpoint'd at every call site, so the
     * emptiness probe is cheap.
     */
   def warnIfTruncated(what: String, frontier: DataFrame, rounds: Int,
@@ -179,8 +269,8 @@ private[graft] object Iteration {
     * WHERE IT PAYS (paired same-host r14 adjudication): simple
     * in-memory rounds — bfs/sssp/raptor/profile (r16 1.01→0.82,
     * r01/r22/r25 small wins, r17 flat). WHERE IT DOESN'T: label-set
-    * (pareto) rounds and the bucketed OnTables faces regressed 10–30%
-    * with it (r31 3.27→3.94, r23 4.73→6.13, r27 6.21→7.72 adjacent
+    * (pareto) rounds and loops over a bucketed input read at rest
+    * ([[LoopInput.tinyBound]]) regressed 10–30% with it (r31 3.27→3.94, r23 4.73→6.13, r27 6.21→7.72 adjacent
     * pairs) — the LocalRelation state side re-plans against the
     * persisted/bucketed scans and the multi-partition take() runs the
     * incremental partial-scan protocol (several jobs/round; a

@@ -104,4 +104,35 @@ object Warehouse {
   }
 
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
+
+  /** Whether `df` is a projection or filter of ONE catalog table bucketed
+    * on `key` alone, with `key` passed through unchanged — the layout
+    * [[writeBucketed]] leaves, whose scan already hash-partitions its rows
+    * on `key`. A join, a repartition, a renamed or derived key, a path
+    * read, or a session with bucketing off does not qualify. Reads the
+    * analyzed plan only, so it launches no job.
+    */
+  def bucketedOn(df: DataFrame, key: String): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    @annotation.tailrec
+    def scan(p: LogicalPlan): Option[LogicalRelation] = p match {
+      case Project(_, c) => scan(c)
+      case Filter(_, c) => scan(c)
+      case SubqueryAlias(_, c) => scan(c)
+      case r: LogicalRelation if r.catalogTable.isDefined => Some(r)
+      case _ => None
+    }
+    val plan = df.queryExecution.analyzed
+    df.sparkSession.sessionState.conf.bucketingEnabled && scan(plan).exists {
+      r => r.relation match {
+        case fs: HadoopFsRelation =>
+          fs.bucketSpec.exists(_.bucketColumnNames == Seq(key)) &&
+            plan.output.exists(a => a.name == key &&
+              r.output.exists(o => o.name == key && o.exprId == a.exprId))
+        case _ => false
+      }
+    }
+  }
 }

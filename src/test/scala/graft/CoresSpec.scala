@@ -114,8 +114,8 @@ class CoresSpec extends SparkTestBase {
     assert(got == lab)
   }
 
-  test("labelPropagationOnTable equals the in-memory loop; the edge " +
-    "table never exchanges in a round") {
+  test("labelPropagation over a dst-bucketed table reads it at rest and " +
+    "equals the in-memory loop; the edge table never exchanges in a round") {
     import graft.graph.Communities
     // denser symmetric graph so buckets carry >1 row
     val half = (1 to 150).map(i => (s"n${i % 23}", s"n${(i * 7 + 3) % 23}"))
@@ -126,12 +126,18 @@ class CoresSpec extends SparkTestBase {
     try {
       val want = Communities.labelPropagation(e, rounds = 4)
         .as[(String, String)].collect().toMap
-      val got = Communities.labelPropagationOnTable(spark,
-        "lpa_spec_edges", rounds = 4).as[(String, String)].collect().toMap
+      val table = spark.table("lpa_spec_edges")
+      val (in, jobs) = jobsDuring(graft.operators.Iteration.stage(
+        table.select(col("src"), col("dst")), "dst", _.localCheckpoint()))
+      in.run(())
+      assert(in.atRest && jobs == 0, s"at rest ${in.atRest}, $jobs jobs")
+      val got = Communities.labelPropagation(table, rounds = 4)
+        .as[(String, String)].collect().toMap
       assert(got == want && got.nonEmpty)
+      assert(spark.sharedState.cacheManager.isEmpty)
       // plan pin: a round over the dst-bucketed table needs one FEWER
-      // hash exchange than over a plain materialized frame (the
-      // bfsHopsOnTable pin applied to the LPA join)
+      // hash exchange than over a plain materialized frame (the bfsHops
+      // at-rest pin applied to the LPA join)
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       try {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -151,5 +157,27 @@ class CoresSpec extends SparkTestBase {
       } finally
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     } finally spark.sql("DROP TABLE IF EXISTS lpa_spec_edges")
+  }
+
+  test("labelPropagation stages a table bucketed on src, not its dst " +
+    "join key, in memory — with identical labels") {
+    import graft.graph.Communities
+    val half = (1 to 150).map(i => (s"n${i % 23}", s"n${(i * 7 + 3) % 23}"))
+      .filter { case (a, b) => a != b }.distinct
+    val e = (half ++ half.map(_.swap)).distinct.toDF("src", "dst")
+    graft.sources.Warehouse.writeBucketed(e, "lpa_spec_src_edges", "src", 4)
+    try {
+      val table = spark.table("lpa_spec_src_edges")
+      val (atRest, jobs) = jobsDuring(
+        graft.sources.Warehouse.bucketedOn(table, "dst"))
+      assert(!atRest && jobs == 0, s"at rest $atRest, $jobs jobs")
+      val in = graft.operators.Iteration.stage(table, "dst",
+        _.localCheckpoint(), repartition = true)
+      assert(!in.atRest && in.tinyBound > 0)
+      assert(Communities.labelPropagation(table, rounds = 4)
+          .as[(String, String)].collect().toMap ==
+        Communities.labelPropagation(e, rounds = 4)
+          .as[(String, String)].collect().toMap)
+    } finally spark.sql("DROP TABLE IF EXISTS lpa_spec_src_edges")
   }
 }

@@ -819,19 +819,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(star == label)
   }
 
-  test("dupClustersOnTable equals dupClusters over the staged table") {
-    // bucketed-CC cluster mode (stageSymEdgesTable + on-table loop):
-    // identical labels to the in-memory loop on both a path graph and
-    // real LSH pairs — the layout changes the plan, never the answer
-    val path = (1L until 40L).map(i => (i, i + 1)).toDF("a", "b")
-    Dedup.stageSymEdgesTable(path, "graft_cc_edges_spec", buckets = 4)
-    val got = Dedup.dupClustersOnTable(spark, "graft_cc_edges_spec",
-      maxIter = 100).as[(Long, Long)].collect().toSet
-    val want = Dedup.dupClusters(path, maxIter = 100)
-      .as[(Long, Long)].collect().toSet
-    assert(got == want && got.map(_._2) == Set(1L))
-  }
-
   test("PqEncode kernel matches the HOF form on every sf0.01 embedding") {
     // the codegen kernel (graft.plans.PqEncode) replaced the interpreted
     // aggregate(zip_with(...)) chains; the HOF form stays as the parity

@@ -80,6 +80,19 @@ class RankingSpec extends SparkTestBase {
     val got = Ranking.pageRankOnTable(spark, "graft_rank_edges_spec",
         iters = 5).as[(String, Long)].collect().toMap
     assert(got == want)
+    // the rank table is src-bucketed, so the loop layout rule reads its
+    // src-keyed projections at rest and nothing joined on dst — without
+    // launching a job to decide
+    val (verdicts, jobs) = jobsDuring {
+      val t = spark.table("graft_rank_edges_spec")
+      Seq(graft.sources.Warehouse.bucketedOn(t.select("src", "dst"), "src"),
+        graft.sources.Warehouse.bucketedOn(t.filter(col("od") > 1), "src"),
+        graft.sources.Warehouse.bucketedOn(t, "dst"),
+        graft.sources.Warehouse.bucketedOn(
+          t.join(t.select(col("src").as("dst")), Seq("dst")), "src"))
+    }
+    assert(verdicts == Seq(true, true, false, false) && jobs == 0,
+      s"$verdicts, $jobs jobs")
 
     // Plan property (the reason the variant exists): with broadcast off,
     // a round over the bucketed table needs one FEWER exchange than the

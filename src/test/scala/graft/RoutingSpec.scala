@@ -70,22 +70,27 @@ class RoutingSpec extends SparkTestBase {
     assert(h == Map("A" -> 0, "B" -> 1, "C" -> 1, "D" -> 2, "E" -> 2))
   }
 
-  test("bfsHopsOnTable/ssspOnTable equal the in-memory loops; the edge " +
-    "table never shuffles in a round") {
-    // a slightly larger graph so buckets carry >1 row each
-    val e = (1 to 120).map(i => (s"n${i % 17}", s"n${(i * 5 + 2) % 17}",
-      "r1", (i % 4 + 1).toDouble)).toDF("src", "dst", "route_id", "weight_m")
-      .dropDuplicates("src", "dst")
+  // a slightly larger graph so buckets carry >1 row each
+  private lazy val routeEdges = (1 to 120).map(i => (s"n${i % 17}",
+      s"n${(i * 5 + 2) % 17}", "r1", (i % 4 + 1).toDouble))
+    .toDF("src", "dst", "route_id", "weight_m").dropDuplicates("src", "dst")
+
+  test("bfsHops/sssp over a src-bucketed table read it at rest and equal " +
+    "the in-memory loops; the edge table never shuffles in a round") {
+    val e = routeEdges
     Routing.stageEdgesTable(e, "graft_route_edges_spec", buckets = 4)
+    val table = spark.table("graft_route_edges_spec")
     val wantB = Routing.bfsHops(e, "n1", 20).as[(String, Int)].collect().toMap
-    val gotB = Routing.bfsHopsOnTable(spark, "graft_route_edges_spec", "n1",
-      20).as[(String, Int)].collect().toMap
+    val gotB = Routing.bfsHops(table, "n1", 20)
+      .as[(String, Int)].collect().toMap
     assert(gotB == wantB && gotB.nonEmpty)
     val wantS = Routing.sssp(e, "n1").select("node", "dist_m")
       .as[(String, Double)].collect().toMap
-    val gotS = Routing.ssspOnTable(spark, "graft_route_edges_spec", "n1")
+    val gotS = Routing.sssp(table, "n1")
       .select("node", "dist_m").as[(String, Double)].collect().toMap
     assert(gotS == wantS)
+    // the loop's input is cached only while it runs
+    assert(spark.sharedState.cacheManager.isEmpty)
 
     // Plan property (why the variant exists): with broadcast off, a BFS
     // round over the bucketed table needs one FEWER hash exchange than
@@ -110,6 +115,81 @@ class RoutingSpec extends SparkTestBase {
         s"bucketed round has $nb exchanges vs plain $np — layout unused")
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  test("the layout rule: only a projection or filter of a table bucketed " +
+    "on the join key is read at rest, and choosing launches no job") {
+    import graft.operators.Iteration
+    import graft.sources.Warehouse
+    Routing.stageEdgesTable(routeEdges, "graft_route_rule_spec", buckets = 4)
+    try {
+      val table = spark.table("graft_route_rule_spec")
+      val other = Seq(("n1", 1)).toDF("src", "w")
+      val atRest = Seq(
+        "the table" -> table,
+        "a projection" -> table.select(col("src"), col("dst")),
+        "a filtered projection" ->
+          table.filter(col("weight_m") > 1.0).select(col("src"), col("dst")))
+      val inMemory = Seq(
+        "a plain frame" -> routeEdges,
+        "a merely repartitioned frame" -> routeEdges.repartition(4, col("src")),
+        "a repartitioned table" -> table.repartition(4, col("src")),
+        "a joined frame" -> table.join(other, Seq("src")),
+        "a renamed key" ->
+          table.select(col("dst").as("src"), col("src").as("dst")))
+      val (verdicts, jobs) = jobsDuring(
+        (atRest ++ inMemory).map { case (what, df) =>
+          what -> Warehouse.bucketedOn(df, "src") })
+      assert(jobs == 0, s"choosing the layout launched $jobs jobs")
+      assert(verdicts.take(atRest.size).forall(_._2), verdicts)
+      assert(!verdicts.drop(atRest.size).exists(_._2), verdicts)
+      // bucketed on a different key than the round joins on: in memory
+      assert(!Warehouse.bucketedOn(table, "dst"))
+
+      // at rest: persisted at the bucket width, classic rounds, no job
+      val (in, stageJobs) = jobsDuring(
+        Iteration.stage(table.select(col("src"), col("dst")), "src",
+          _.localCheckpoint(), repartition = true))
+      try {
+        assert(stageJobs == 0, s"staging at rest launched $stageJobs jobs")
+        assert(in.atRest && in.parts == 4 && in.tinyBound == 0)
+        // the cache keeps the bucketed partitioning: a round over the
+        // persisted input plans one hash exchange fewer than over the
+        // same edges checkpointed from a plain frame
+        val dist = Seq(("n1", 0)).toDF("node", "hops")
+          .withColumn("__new", lit(true)).localCheckpoint()
+        def exchanges(ed: org.apache.spark.sql.DataFrame): Int =
+          Iteration.withShufflePartitions(spark, in.parts) {
+            Routing.bfsRound(ed, dist, dist.filter(col("__new")))
+              .queryExecution.explainString(
+                org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+              .linesIterator.count(_.contains("Exchange hashpartitioning"))
+          }
+        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        try {
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+          val (nb, np) = (exchanges(in.frame),
+            exchanges(routeEdges.select(col("src"), col("dst"))
+              .localCheckpoint()))
+          assert(nb == np - 1,
+            s"persisted round has $nb exchanges vs plain $np — layout lost")
+        } finally
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      } finally in.run(())
+      assert(spark.sharedState.cacheManager.isEmpty)
+      // in memory: checkpointed, narrowed to the round width
+      val mem = Iteration.stage(table.repartition(4, col("src")), "src",
+        _.localCheckpoint())
+      assert(!mem.atRest && mem.parts == 1 &&
+        mem.frame.rdd.getNumPartitions == 1 &&
+        mem.tinyBound == Iteration.TinyStateBound)
+      // and the loops agree whatever layout they are handed
+      val want = Routing.bfsHops(routeEdges, "n1", 20)
+        .as[(String, Int)].collect().toMap
+      for ((what, df) <- inMemory.take(3))
+        assert(Routing.bfsHops(df, "n1", 20).as[(String, Int)].collect()
+          .toMap == want, what)
+    } finally spark.sql("DROP TABLE IF EXISTS graft_route_rule_spec")
   }
 
   test("earliestArrival: hand-computed itineraries on a 3-stop timetable") {
@@ -185,7 +265,7 @@ class RoutingSpec extends SparkTestBase {
     assert(gotP == wantP && wantP.nonEmpty)
   }
 
-  test("earliestArrivalOnTables threads transfers identically to the " +
+  test("earliestArrival at rest threads transfers identically to the " +
     "in-memory loop") {
     val st = (0 until 40).flatMap { t =>
       (0 to 3).map(j => (s"T$t", j, s"s${(t * 3 + j * 5) % 11}",
@@ -199,9 +279,9 @@ class RoutingSpec extends SparkTestBase {
       val want = Routing.earliestArrival(st, "s0", 0L, maxRounds = 25,
           transfers = Some(xf))
         .as[(String, Long)].collect().toMap
-      val got = Routing.earliestArrivalOnTables(spark, "graft_st_stop_xspec",
-          "graft_st_trip_xspec", "s0", 0L, maxRounds = 25,
-          transfers = Some(xf))
+      val got = Routing.earliestArrival(spark.table("graft_st_stop_xspec"),
+          "s0", 0L, maxRounds = 25, transfers = Some(xf),
+          byTrip = Some(spark.table("graft_st_trip_xspec")))
         .as[(String, Long)].collect().toMap
       assert(got == want && got.size > 1, s"got=$got want=$want")
       // and transfers changed something vs the zero-slack run
@@ -302,8 +382,8 @@ class RoutingSpec extends SparkTestBase {
     assert(again.toSet == got.toSet)
   }
 
-  test("paretoJourneysOnTables equals the in-memory loop over the " +
-    "dual bucketed layout") {
+  test("paretoJourneys over the dual bucketed layout equals the " +
+    "in-memory loop") {
     val st = (0 until 40).flatMap { t =>
       (0 to 3).map(j => (s"T$t", j, s"s${(t * 3 + j * 5) % 11}",
         (t * 7 + j * 13).toLong, (t * 7 + j * 13).toLong))
@@ -315,18 +395,20 @@ class RoutingSpec extends SparkTestBase {
     try {
       val want = Routing.paretoJourneys(st, tf, "s0", 0L, maxRounds = 25)
         .as[(String, Long, Long)].collect().toSet
-      val got = Routing.paretoJourneysOnTables(spark, "graft_st_stop_pspec",
-          "graft_st_trip_pspec", tf, "s0", 0L, maxRounds = 25)
+      val got = Routing.paretoJourneys(spark.table("graft_st_stop_pspec"),
+          tf, "s0", 0L, maxRounds = 25,
+          byTrip = Some(spark.table("graft_st_trip_pspec")))
         .as[(String, Long, Long)].collect().toSet
       assert(got == want && got.nonEmpty)
+      assert(spark.sharedState.cacheManager.isEmpty)
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_st_stop_pspec")
       spark.sql("DROP TABLE IF EXISTS graft_st_trip_pspec")
     }
   }
 
-  test("earliestArrivalOnTables equals the in-memory loop; neither " +
-    "fact-table side shuffles in a round") {
+  test("earliestArrival over the dual bucketed layout equals the " +
+    "in-memory loop; neither fact-table side shuffles in a round") {
     // a denser timetable so both bucketed copies carry >1 row per bucket:
     // 40 trips over 11 stops, increasing times along each trip
     val st = (0 until 40).flatMap { t =>
@@ -337,17 +419,35 @@ class RoutingSpec extends SparkTestBase {
       "graft_st_trip_spec", buckets = 4)
     val want = Routing.earliestArrival(st, "s0", 0L, maxRounds = 20)
       .as[(String, Long)].collect().toMap
-    val got = Routing.earliestArrivalOnTables(spark, "graft_st_stop_spec",
-        "graft_st_trip_spec", "s0", 0L, maxRounds = 20)
+    val byStop = spark.table("graft_st_stop_spec")
+    val byTrip = spark.table("graft_st_trip_spec")
+    val got = Routing.earliestArrival(byStop, "s0", 0L, maxRounds = 20,
+        byTrip = Some(byTrip))
       .as[(String, Long)].collect().toMap
     assert(got == want && got.size > 1, s"got=$got want=$want")
+    // a given copy must be bucketed on trip for the loop to read at
+    // rest: handed the wrong copy or a plain frame it stages in memory;
+    // with no copy the stop-bucketed board side alone is read at rest.
+    // The labels never change.
+    val cases = Seq(
+      "the stop copy as byTrip" -> (Some(byStop), false),
+      "a plain byTrip" -> (Some(st), false),
+      "no byTrip" -> (None, true))
+    for ((what, (copy, atRest)) <- cases) {
+      val in = graft.operators.Iteration.stage(byStop, "stop",
+        _.localCheckpoint(), copy = copy.map(_ -> "trip"))
+      in.run(())
+      assert(in.atRest == atRest, what)
+      assert(Routing.earliestArrival(byStop, "s0", 0L, maxRounds = 20,
+          byTrip = copy).as[(String, Long)].collect().toMap == want, what)
+    }
 
     // Plan property (why the dual layout exists): with broadcast off, a
     // RAPTOR round over the two bucketed copies needs TWO fewer hash
     // exchanges than the same round over plain materialized frames —
     // the stop bucketing substitutes for the board join's fact-side
-    // shuffle and the trip bucketing for the ride join's (the
-    // bfsHopsOnTable pin, applied to the two-key round).
+    // shuffle and the trip bucketing for the ride join's (the bfsHops
+    // at-rest pin, applied to the two-key round).
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

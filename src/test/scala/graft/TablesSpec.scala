@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{Callable, CyclicBarrier, Executors, LinkedBlockingQueue, TimeUnit}
+import java.util.concurrent.{Callable, CyclicBarrier, Executors, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
@@ -10,7 +10,6 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -32,44 +31,6 @@ class TablesSpec extends SparkTestBase {
   private def sample(): DataFrame =
     spark.range(0, 200, 1, 4).select(col("id").as("k"),
       (col("id") * 3).cast("string").as("v"), (col("id") % 7).as("g"))
-
-  /** Spark jobs started while `body` runs, with its result. Listener events
-    * arrive asynchronously, so a sentinel job before and after the body
-    * bounds the window on the listener side.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val descs = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def sentinel(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-    }
-    def drainUntil(tag: String): Int = {
-      var n = 0
-      var d = descs.poll(60, TimeUnit.SECONDS)
-      while (d != tag) {
-        assert(d != null, s"sentinel job '$tag' never reached the listener")
-        n += 1
-        d = descs.poll(60, TimeUnit.SECONDS)
-      }
-      n
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("tables-spec-start")
-      drainUntil("tables-spec-start")
-      val out = body
-      sentinel("tables-spec-end")
-      (out, drainUntil("tables-spec-end"))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
