@@ -1,7 +1,8 @@
 package graft
 
 /** Plan-inspection tool: for each named query (or all), print the
-  * formatted physical plan and three timed runs against a noop sink.
+  * formatted physical plan. It runs no timed pass: [[Profile]] times a
+  * query, with Bench's warm-up and a per-job breakdown.
   *
   * Usage: runMain graft.Explain [sfDir] [queryName ...]
   */
@@ -38,19 +39,8 @@ object Explain {
                 else SparkEntry.queries.keys.toSeq.sorted
     val spark = Graft.session()
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       println(s"\n===== $name =====")
-      fn(spark, sfDir).explain("formatted")
-      // SPARK_GRAFT_EXPLAIN_NOTIME=1 skips the timed passes (plan-file
-      // capture for plans/r16 — timing there belongs to Bench)
-      if (!sys.env.contains("SPARK_GRAFT_EXPLAIN_NOTIME")) {
-        val times = (1 to 3).map { _ =>
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[times] ${times.map(t => f"$t%.3f").mkString(" ")} sec")
-      }
+      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -93,26 +93,15 @@ object Ranking {
     // out-degree attached to every edge ONCE, then materialized so no
     // round re-derives it
     val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val ew = ckpt(e0.join(deg, Seq("src")))
+    val in = graft.operators.Iteration.stage(e0.join(deg, Seq("src")),
+      "src", ckpt)
     val nodes = ckpt(
       e0.select(col("src").as("node"))
         .unionByName(e0.select(col("dst").as("node")))
         .distinct())
-    iterate(ew, nodes, iters, scale, broadcastRanks, ckpt)
+    iterate(in, nodes, iters, scale, broadcastRanks, ckpt)
   }
 
-  /** [[pageRank]] over a src-bucketed edge table written by
-    * [[writeBucketedEdges]] — the cluster deployment mode for rank
-    * iteration. Every round's rank join reads the bucket layout straight
-    * from the metastore, so the O(E) side NEVER shuffles, round after
-    * round, no matter how large V grows. The checkpoint-based form
-    * cannot promise that (AQE checkpoints drop partitioning — PlanSpec);
-    * at 100 TB, re-scanning a bucketed columnar table per round is the
-    * cheaper side of the trade against re-shuffling it per round.
-    * Identical integer semantics to [[pageRank]] (RankingSpec pins the
-    * equality); RankingSpec also pins the plan property: with broadcast
-    * disabled, a round has exchanges ONLY on the V-sized frames.
-    */
   /** WEIGHTED PageRank: contributions proportional to edge weight over
     * the source's total out-weight — rank flows where the volume flows
     * (trade value, link count), the form crawl/domain weighting
@@ -142,12 +131,13 @@ object Ranking {
         // coalesce: a NULL w must not null the diagnostic itself
         coalesce(col("w").cast("string"), lit("NULL"))))).as("w")))
     val ws = e0.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    val ew = ckpt(e0.join(ws, Seq("src")))
+    val in = graft.operators.Iteration.stage(e0.join(ws, Seq("src")),
+      "src", ckpt)
     val nodes = ckpt(
       e0.select(col("src").as("node"))
         .unionByName(e0.select(col("dst").as("node")))
         .distinct())
-    iterate(ew, nodes, iters, scale, broadcastRanks, ckpt,
+    iterate(in, nodes, iters, scale, broadcastRanks, ckpt,
       contrib = "(r * w) div wsum")
   }
 
@@ -175,7 +165,8 @@ object Ranking {
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
     val e0 = ckpt(edges.select(col("src"), col("dst")))
     val deg = e0.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val ew = ckpt(e0.join(deg, Seq("src")))
+    val in = graft.operators.Iteration.stage(e0.join(deg, Seq("src")),
+      "src", ckpt)
     val nodes = ckpt(
       e0.select(col("src").as("node"))
         .unionByName(e0.select(col("dst").as("node")))
@@ -190,26 +181,36 @@ object Ranking {
     require(!nodes.filter(col("is_seed") === 1).isEmpty,
       "personalizedPageRank: no seed appears as an edge endpoint — " +
         "the restart distribution would be empty and every rank 0")
-    iterate(ew, nodes, iters, scale, broadcastRanks, ckpt,
+    iterate(in, nodes, iters, scale, broadcastRanks, ckpt,
       personalized = true)
   }
 
+  /** [[pageRank]] over a src-bucketed edge table written by
+    * [[writeBucketedEdges]] — the cluster deployment mode for rank
+    * iteration. Every round's rank join reads the bucket layout straight
+    * from the metastore, so the O(E) side NEVER shuffles, round after
+    * round, no matter how large V grows. The checkpoint-based form
+    * cannot promise that (AQE checkpoints drop partitioning — PlanSpec);
+    * at 100 TB, re-scanning a bucketed columnar table per round is the
+    * cheaper side of the trade against re-shuffling it per round.
+    * Identical integer semantics to [[pageRank]] (RankingSpec pins the
+    * equality); RankingSpec also pins the plan property: with broadcast
+    * disabled, a round has exchanges ONLY on the V-sized frames. The
+    * table is staged by [[graft.operators.Iteration.stage]], so one not
+    * bucketed on src runs in memory, as [[pageRank]] does.
+    */
   def pageRankOnTable(spark: org.apache.spark.sql.SparkSession,
                       table: String, iters: Int, scale: Long = 1000000L,
                       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    // persisted for the loop — InMemoryRelation keeps the bucketed
-    // outputPartitioning and the rounds stop re-decoding the parquet
-    // (the r19 lesson; see graft.operators.Iteration.stage)
-    val ew = spark.table(table).persist() // (src, dst, od), bucketed by src
+    // (src, dst, od), bucketed by src: read at rest
+    val in = graft.operators.Iteration.stage(spark.table(table), "src", ckpt)
     val nodes = ckpt(
-      ew.select(col("src").as("node"))
-        .unionByName(ew.select(col("dst").as("node")))
+      in.frame.select(col("src").as("node"))
+        .unionByName(in.frame.select(col("dst").as("node")))
         .distinct())
-    try iterate(ew, nodes, iters, scale, bcastRanks = false, ckpt,
-      narrowEdges = false)
-    finally ew.unpersist(blocking = false)
+    iterate(in, nodes, iters, scale, bcastRanks = false, ckpt)
   }
 
   /** Stage the edge side of [[pageRankOnTable]]: out-degree precomputed,
@@ -235,37 +236,20 @@ object Ranking {
     * round; and at user-chosen high `iters` that unmaterialized depth
     * turns into runaway analysis time, where the eager form stays flat.
     */
-  private def iterate(ew: DataFrame, nodes: DataFrame, iters: Int,
+  private def iterate(in: graft.operators.Iteration.LoopInput,
+                      nodes: DataFrame, iters: Int,
                       scale: Long, bcastRanks: Boolean,
                       ckpt: DataFrame => DataFrame,
                       contrib: String = "r div od",
-                      narrowEdges: Boolean = true,
                       personalized: Boolean = false): DataFrame = {
-    val spark = ew.sparkSession
-    // rounds plan under an edge-count-derived partition count (ew is
-    // already materialized, so the count is one cheap job); see
-    // Iteration.roundPartitions for the measured adjudication. In
-    // broadcast-ranks mode the per-round task width is ew's RDD
-    // partition count (no shuffle on the E side — the point), so the
-    // materialized frame narrows by coalesce (zero-copy partition
-    // merge, no shuffle) to the same width the conf gives the
-    // shuffling mode.
-    // In on-table mode (narrowEdges = false) the rounds must plan AT
-    // the bucket width: a smaller count would re-exchange the rank side
-    // against the fixed bucket partitioning every round (measured: r08
-    // 1.9 -> 2.3 s), and coalescing the table would strip the layout.
-    val parts =
-      if (narrowEdges)
-        graft.operators.Iteration.roundPartitions(spark, ew.count())
-      else ew.rdd.getNumPartitions
-    def narrow(df: DataFrame): DataFrame =
-      if (parts < df.rdd.getNumPartitions) df.coalesce(parts) else df
-    // narrowEdges = false preserves a bucketed edge table's layout —
-    // coalescing it would strip the bucket outputPartitioning and bring
-    // back the E-side exchange the on-table variant exists to remove
-    val ewR = if (narrowEdges) narrow(ew) else ew
-    val nodesR = narrow(nodes)
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    val spark = nodes.sparkSession
+    // the node frame narrows to the round width like the staged edges
+    // (in broadcast-ranks mode a round's task width is their partition
+    // count, not the conf)
+    val nodesR =
+      if (in.parts < nodes.rdd.getNumPartitions) nodes.coalesce(in.parts)
+      else nodes
+    in.run {
       val r0 =
         if (personalized)
           nodesR.select(col("node"), col("is_seed"),
@@ -275,16 +259,17 @@ object Ranking {
       var r = ckpt(r0)
       var i = 0
       while (i < iters) {
-        // on-table rounds (narrowEdges = false: bucketed layout, zero
-        // E-side exchange) plan without AQE — the Iteration
-        // .withoutAdaptive lever; the IN-MEMORY rounds KEEP it: their
-        // per-round E-scale shuffles measured 40-75% slower without
+        // rounds over a table read at rest plan without AQE — the
+        // Iteration.withoutAdaptive lever; the IN-MEMORY rounds KEEP it:
+        // their per-round E-scale shuffles measured 40-75% slower without
         // AQE's post-shuffle coalescing (r07 3.07→5.35, r14 3.67→5.33,
         // r21 3.51→5.32 under a global AQE-off — BENCH_NOTES.md §Round 16)
-        val round = rankRound(ewR, nodesR, r.select(col("node"), col("r")),
-          scale, bcastRanks, contrib, personalized)
-        r = if (narrowEdges) ckpt(round)
-            else graft.operators.Iteration.withoutAdaptive(spark)(ckpt(round))
+        val round = rankRound(in.frame, nodesR,
+          r.select(col("node"), col("r")), scale, bcastRanks, contrib,
+          personalized)
+        r = if (in.atRest)
+              graft.operators.Iteration.withoutAdaptive(spark)(ckpt(round))
+            else ckpt(round)
         i += 1
       }
       r.select(col("node"), col("r"))

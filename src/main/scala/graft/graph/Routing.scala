@@ -977,8 +977,9 @@ object Routing {
                               broadcastLabels: Boolean = true): DataFrame = {
     val spark = stopTimes.sparkSession
     val ckpt = Iteration.materializer(spark, checkpointDir)
-    val parents = ckpt(parentEvents(stopTimes, labels, sourceStop,
-      transfers, broadcastTransfers, broadcastLabels))
+    val in = Iteration.stage(parentEvents(stopTimes, labels, sourceStop,
+      transfers, broadcastTransfers, broadcastLabels), "stop", ckpt)
+    val parents = in.frame
     val legCols = Seq(col("kind"), col("from_stop"),
       col("stop").as("to_stop"), col("trip"), col("dep_t"), col("arr_t"))
     // every destination's LAST leg is its own parent row
@@ -987,12 +988,8 @@ object Routing {
     val slices = scala.collection.mutable.ListBuffer(ext.drop("__cur"))
     var hops = 0
     var frontier = ext.select(col("dest"), col("__cur"))
-    // round-17: loop-family treatment for the unroll loop (same change
-    // and rationale as paretoJourneyForest — see that loop's comment;
-    // paired numbers in OPTIMIZATION_r17.md §4)
-    val parts = Iteration.roundPartitions(
-      spark, parents.count())
-    Iteration.withShufflePartitions(spark, parts) {
+    // hops plan without AQE, as paretoJourneyForest's do
+    in.run {
       while (hops < maxHops && !frontier.isEmpty) {
         ext = Iteration.withoutAdaptive(spark)(
           ckpt(frontier.join(parents,
@@ -1158,9 +1155,10 @@ object Routing {
                           broadcastLabels: Boolean = true): DataFrame = {
     val spark = stopTimes.sparkSession
     val ckpt = Iteration.materializer(spark, checkpointDir)
-    val parents = ckpt(paretoParentEvents(stopTimes, tripFares, front,
+    val in = Iteration.stage(paretoParentEvents(stopTimes, tripFares, front,
       sourceStop, depTime, transfers, broadcastTransfers,
-      broadcastLabels))
+      broadcastLabels), "stop", ckpt)
+    val parents = in.frame
     val legCols = Seq(col("kind"), col("from_stop"),
       col("stop").as("to_stop"), col("trip"), col("dep_t"),
       col("arr_t"), col("fare"))
@@ -1175,18 +1173,11 @@ object Routing {
     var hops = 0
     var frontier = ext.select(col("dest_stop"), col("dest_arr"),
       col("dest_fare"), col("__cs"), col("__ca"), col("__cf"))
-    // round-17: the unroll loop gets the Iteration loop-family
-    // treatment the fixpoint loops already have (guide §2) — every
-    // per-hop frame is bounded by the FOREST (front × depth,
-    // dimension-scale), and parents is materialized, so its row count
-    // derives the round width (1 at sf0.1; grows with the label space,
-    // never a local constant) and each hop's checkpoint plans without
-    // AQE (one job per shuffle stage + driver re-planning gap per hop
-    // is pure overhead on label-scale frames; SPARK_GRAFT_LOOP_AQE
-    // re-enables). Paired numbers in OPTIMIZATION_r17.md §4.
-    val parts = Iteration.roundPartitions(
-      spark, parents.count())
-    Iteration.withShufflePartitions(spark, parts) {
+    // every per-hop frame is bounded by the FOREST (front × depth,
+    // dimension-scale), so each hop plans without AQE: one job per
+    // shuffle stage plus a driver re-planning gap per hop is pure
+    // overhead on label-scale frames (OPTIMIZATION_r17.md §4)
+    in.run {
       while (hops < maxHops && !frontier.isEmpty) {
         ext = Iteration.withoutAdaptive(spark)(
           ckpt(frontier.join(parents,

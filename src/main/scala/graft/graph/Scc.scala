@@ -46,8 +46,9 @@ import org.apache.spark.sql.functions._
   * edge frame is pre-hash-partitioned on src (the forward join key) and
   * re-materialized only when it shrinks (once per OUTER round, not per
   * propagation round). Inner loops shuffle only frontier-sized frames —
-  * the [[Routing.bfsHops]] doctrine. Rounds plan at the edge-derived
-  * width ([[graft.operators.Iteration.roundPartitions]]).
+  * the [[Routing.bfsHops]] doctrine. The edge frame is staged like
+  * [[Routing.bfsHops]]' ([[graft.operators.Iteration.stage]]) and every
+  * round plans at its width.
   */
 object Scc {
 
@@ -79,12 +80,10 @@ object Scc {
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
     val eSel = edges.select(col("src"), col("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull).distinct()
-    var e = ckpt(if (prePartitionEdges) eSel.repartition(col("src")) else eSel)
-    val parts =
-      if (prePartitionEdges)
-        graft.operators.Iteration.roundPartitions(spark, e.count())
-      else spark.sessionState.conf.numShufflePartitions
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    val in = graft.operators.Iteration.stage(eSel, "src", ckpt,
+      repartition = prePartitionEdges, sized = prePartitionEdges)
+    in.run {
+      var e = in.frame
       var active = ckpt(e.select(col("src").as("node"))
         .union(e.select(col("dst"))).distinct())
       // settled accumulates (node, scc); grown by union + ckpt per outer

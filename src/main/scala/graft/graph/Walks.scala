@@ -24,9 +24,10 @@ import org.apache.spark.sql.functions._
   * current node plus a per-walk argmin — the [[Routing.bfsHops]] shuffle
   * shape with a fixed round count and NON-GROWING state. Dead-end nodes
   * end their walk early (the join simply drops it). The O(E) side
-  * re-joins per round; stage it src-bucketed ([[Routing.stageEdgesTable]])
-  * when rounds dominate at cluster scale — same remedy as every
-  * frontier loop here.
+  * re-joins per round; hand in a src-bucketed table
+  * ([[Routing.stageEdgesTable]]) when rounds dominate at cluster scale:
+  * it is read at rest ([[graft.operators.Iteration.stage]]) and only the
+  * walk frame shuffles — same remedy as every frontier loop here.
   */
 object Walks {
 
@@ -41,26 +42,37 @@ object Walks {
     require(len >= 1, s"len must be >= 1, got $len")
     val spark = edges.sparkSession
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val e = ckpt(edges.select(col("src"), col("dst")))
+    // unsized: a step plans at the session width, so counting the edges
+    // would cost a job for nothing
+    val in = graft.operators.Iteration.stage(
+      edges.select(col("src"), col("dst")), "src", ckpt, sized = false)
     var cur = ckpt(seeds.select(col("walk_id"), col("node")))
     val slices = scala.collection.mutable.ListBuffer(
       cur.select(col("walk_id"), lit(0).as("step"), col("node")))
-    for (k <- 1 to len) {
-      // rank = deterministic draw for (walk, step, candidate); dst
-      // tie-break keeps the argmin total even on 32-bit hash collisions
-      val rank = graft.functions.text.saltedHash32(
-        concat_ws(":", col("walk_id"), lit(k), e("dst")), salt)
+    in.run(for (k <- 1 to len) {
       // steps plan without AQE (the frontierFixpoint classic-round
       // lever: panel-sized state, fixed shape — paired numbers in
       // BENCH_NOTES.md §Round 16)
       cur = graft.operators.Iteration.withoutAdaptive(spark)(
-        ckpt(cur.join(e, cur("node") === e("src"))
-          .groupBy(col("walk_id"))
-          .agg(min_by(e("dst"), struct(rank.as("r"), e("dst").as("d")))
-            .as("node"))))
+        ckpt(walkStep(in.frame, cur, k, salt)))
       slices += cur.select(col("walk_id"), lit(k).as("step"), col("node"))
-    }
+    })
     slices.reduce(_ unionByName _)
+  }
+
+  /** One un-materialized [[randomWalks]] step — package-visible for plan
+    * pins (the Routing.bfsRound pattern).
+    */
+  private[graft] def walkStep(e: DataFrame, cur: DataFrame, k: Int,
+                              salt: Int): DataFrame = {
+    // rank = deterministic draw for (walk, step, candidate); dst
+    // tie-break keeps the argmin total even on 32-bit hash collisions
+    val rank = graft.functions.text.saltedHash32(
+      concat_ws(":", col("walk_id"), lit(k), e("dst")), salt)
+    cur.join(e, cur("node") === e("src"))
+      .groupBy(col("walk_id"))
+      .agg(min_by(e("dst"), struct(rank.as("r"), e("dst").as("d")))
+        .as("node"))
   }
 
   /** BIASED (node2vec-class) walks — [[randomWalks]] with 2nd-order
@@ -103,7 +115,9 @@ object Walks {
     require(hubDegreeCap >= 1, s"hubDegreeCap must be >= 1, got $hubDegreeCap")
     val spark = edges.sparkSession
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val e = ckpt(edges.select(col("src"), col("dst")))
+    val in = graft.operators.Iteration.stage(
+      edges.select(col("src"), col("dst")), "src", ckpt, sized = false)
+    val e = in.frame
     // distance-1 probe as a V-SIZED neighbor-set frame (one row per
     // source node, out-neighbors collected into a set): the per-round
     // left join then probes |V| rows instead of |E| (measured r42
@@ -146,7 +160,7 @@ object Walks {
       lit(null).cast(nodeType).as("prev")))
     val slices = scala.collection.mutable.ListBuffer(
       cur.select(col("walk_id"), lit(0).as("step"), col("node")))
-    for (k <- 1 to len) {
+    in.run(for (k <- 1 to len) {
       val cand = cur.join(e, cur("node") === e("src"))
         .select(col("walk_id"), cur("node").as("__vn"), col("prev"),
           e("dst").as("__d"))
@@ -178,7 +192,7 @@ object Walks {
           .select(col("walk_id"), col("__n.node").as("node"),
             col("__n.prev").as("prev"))))
       slices += cur.select(col("walk_id"), lit(k).as("step"), col("node"))
-    }
+    })
     slices.reduce(_ unionByName _)
   }
 
@@ -404,21 +418,16 @@ object Walks {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val spark = ppmi.sparkSession
     val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val m = ckpt(ppmi.select(col("center"), col("context"), col("ppmi_bp")))
+    val in = graft.operators.Iteration.stage(
+      ppmi.select(col("center"), col("context"), col("ppmi_bp")), "context",
+      ckpt)
+    val m = in.frame
     val nodes = m.select(col("center").as("node"))
       .union(m.select(col("context").as("node"))).distinct()
-    // round-17: the matvec loop gets the data-derived round WIDTH of
-    // the Iteration loop family (guide §2) — the loop's largest frame
-    // is the materialized PPMI matrix, so its row count derives the
-    // width (the same rule as every frontier loop). The rounds KEEP
-    // AQE, like the in-memory pagerank rounds: the matvec's E-scale
-    // join+agg measured FASTER with AQE's post-shuffle handling in
-    // paired A/B at BOTH bench points (sf0.1 6.39 vs 7.02, sf1 10.97
-    // vs 11.67 — OPTIMIZATION_r17.md §4), so the AQE-off lever is
-    // scoped OUT of this loop by measurement, exactly as
-    // Ranking.iterate keeps it for the in-memory rounds.
-    val parts = graft.operators.Iteration.roundPartitions(spark, m.count())
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    // the rounds KEEP AQE, like the in-memory pagerank rounds: the
+    // matvec's E-scale join+agg measured FASTER with it in paired A/B
+    // (sf0.1 6.39 vs 7.02, sf1 10.97 vs 11.67 — OPTIMIZATION_r17.md §4)
+    in.run {
       var x = ckpt(nodes.select(col("node") +: (0 until dims).map { d =>
         (pmod(graft.functions.text.saltedHash32(
           concat_ws(":", col("node"), lit(d)), salt), lit(20001L)) -

@@ -458,22 +458,12 @@ object Dedup {
     val p0 = ckpt(pairs.select(col("a"), col("b")))
     val sym = p0.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(p0.select(col("b").as("src"), col("a").as("dst")))
-    // Pre-partitioned on the per-round join key (src) before
-    // materializing — measured at sf0.1 (paired 7-pass mins): r04
-    // 3.85→3.53 s. See Routing.bfsHops for the actual mechanism (layout
-    // balance, NOT exchange elision — AQE checkpoints drop partitioning
-    // metadata, PlanSpec pins it) and when to pass
-    // `prePartitionEdges = false` (one-partition graphs). There is no
-    // at-rest layout here: the symmetric edge frame is derived from the
-    // caller's pairs on every call.
-    val eSym = if (pairsCanonical) sym else sym.distinct()
-    val e0 = ckpt(if (prePartitionEdges) eSym.repartition(col("src")) else eSym)
-    // edge-count-derived round partitions + zero-copy narrow — the same
-    // lever (and measured adjudication) as Ranking.loop / Routing.sssp;
-    // see Iteration.roundPartitions. The symmetrize/distinct INPUT
-    // derivation above already ran at full session width.
-    val parts = Iteration.roundPartitions(spark, e0.count())
-    val e = if (parts < e0.rdd.getNumPartitions) e0.coalesce(parts) else e0
+    // Staged pre-partitioned on the per-round join key (src): r04
+    // 3.85→3.53 s at sf0.1; see Routing.bfsHops for the mechanism and
+    // when to pass `prePartitionEdges = false`. The symmetric edge frame
+    // is derived from the caller's pairs, so it is always in memory.
+    val in = Iteration.stage(if (pairsCanonical) sym else sym.distinct(),
+      "src", ckpt, repartition = prePartitionEdges)
     // One checkpoint per round: the label set absorbs this round's
     // improvements through a single full-outer merge (same shape as
     // Routing.sssp — the previous lazy anti-join chain re-executed every
@@ -493,9 +483,7 @@ object Dedup {
     // join + groupBy + merge — one round (and its checkpoint) gone.
     // Every node appears as a src (edges are symmetric), so the seed
     // covers the full node set.
-    Iteration.withShufflePartitions(spark, parts) {
-      ccLoop(e, maxIter, ckpt, broadcastFrontier)
-    }
+    in.run(ccLoop(in.frame, maxIter, ckpt, broadcastFrontier))
   }
 
   /** One un-materialized min-label round — package-visible for plan pins
@@ -647,11 +635,11 @@ object Dedup {
           lit(0).cast("decimal(38,0)"))).head()
       (r.getLong(0), String.valueOf(r.get(1)))
     }
-    var edges = ckpt(pairs.select(col("a").as("u"), col("b").as("v")))
-    // edge-count-derived round partitions (Iteration.roundPartitions) —
     // sized from the INITIAL edge set; star rounds only ever shrink it
-    val parts = Iteration.roundPartitions(spark, edges.count())
-    Iteration.withShufflePartitions(spark, parts) {
+    val in = Iteration.stage(pairs.select(col("a").as("u"), col("b").as("v")),
+      "u", ckpt)
+    var edges = in.frame
+    in.run {
       var prev = checksum(edges)
       var converged = false
       var i = 0
@@ -667,13 +655,10 @@ object Dedup {
           s"dupClustersStar stopped at maxIter=$maxIter without a stable " +
             "edge set; results may be partial — raise maxIter")
     }
-    // The output projection sits OUTSIDE the narrowed-width block ON
-    // PURPOSE (the withShufflePartitions laziness contract): a lazy frame
-    // returned from the block would plan its distinct after the conf is
-    // restored anyway, silently ignoring the round width. The final
-    // distinct is the hand-off to the session's downstream plan, so the
-    // SESSION width is the intended width here — rounds (all checksummed
-    // and ckpt'd inside) are the only work the narrow knob targets.
+    // The output projection sits OUTSIDE `in.run` ON PURPOSE: a lazy
+    // frame returned from it would plan its distinct at the session width
+    // anyway (the Iteration.withShufflePartitions laziness contract), and
+    // that is the intended width for the hand-off downstream.
     // At fixpoint edges are (member, root): add the roots themselves.
     edges.select(col("u").as("member"), col("v").as("cluster"))
       .unionByName(edges.select(col("v").as("member"), col("v").as("cluster")))

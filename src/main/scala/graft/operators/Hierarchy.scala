@@ -48,16 +48,14 @@ object Hierarchy {
       valueCol: String, rounds: Int,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(rounds >= 0, "rounds must be non-negative")
-    val spark = nodes.sparkSession
-    val ckpt = graft.operators.Iteration.materializer(spark, checkpointDir)
-    val base = ckpt(nodes.select(col(keyCol).as("k"),
-      col(parentCol).as("p"), col(valueCol).cast("long").as("v")))
-    val parts = graft.operators.Iteration.roundPartitions(spark, base.count())
-    graft.operators.Iteration.withShufflePartitions(spark, parts) {
+    val ckpt = Iteration.materializer(nodes.sparkSession, checkpointDir)
+    val in = Iteration.stage(nodes.select(col(keyCol).as("k"),
+      col(parentCol).as("p"), col(valueCol).cast("long").as("v")), "k", ckpt)
+    in.run {
       // the parent pointer AND value ride the loop frame — recovering
       // either with a per-round t⋈base join would add a V-sized shuffle
       // join per round for columns the rebuild already has in hand
-      var t = ckpt(base.select(col("k"), col("p"), col("v"),
+      var t = ckpt(in.frame.select(col("k"), col("p"), col("v"),
         col("v").as("total"), lit(0L).as("n_desc")))
       var i = 0
       var converged = false

@@ -2,12 +2,16 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** The one way a loop runs: [[stage]] lays out the loop input by the
-  * layout it arrives in (at rest in a bucketed table, or in memory),
-  * [[roundPartitions]] / [[withShufflePartitions]] / [[withoutAdaptive]]
-  * scope the rounds' planning, [[frontierFixpoint]] drives
-  * __new-flagged frontier rounds, [[materializer]] truncates lineage per
-  * round and [[warnIfTruncated]] reports a loop cut off with work left.
+/** The one way a loop runs: every loop stages its input through
+  * [[stage]] (at rest in a bucketed table, or in memory) and runs its
+  * rounds inside [[LoopInput.run]], at the width the staging chose.
+  * [[withoutAdaptive]] turns AQE off for the rounds that measured faster
+  * without it, [[frontierFixpoint]] drives __new-flagged frontier
+  * rounds, [[materializer]] truncates lineage per round and
+  * [[warnIfTruncated]] reports a loop cut off with work left. Outside
+  * this object [[roundPartitions]] only sizes bucketed tables (GraphQ,
+  * ScaleQ) and, with [[withShufflePartitions]], Similarity's training
+  * rounds, whose width comes from the model size.
   */
 private[graft] object Iteration {
 
@@ -170,12 +174,8 @@ private[graft] object Iteration {
     * the rounds plan under `n`.
     */
   def withShufflePartitions[T](spark: org.apache.spark.sql.SparkSession,
-                               n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
-  }
+                               n: Int)(body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
 
   /** Run `body` (a loop's rounds) with adaptive query execution
     * disabled, then restore the session setting — the round-16
@@ -206,21 +206,19 @@ private[graft] object Iteration {
     * r32 6.76→5.90 — and the forest/backtrack phases OUTSIDE
     * frontierFixpoint keep AQE (their one-shot broadcast-join plans
     * measured BETTER with it: r33/r35/r38 regressed under a global
-    * AQE-off), which is why the scope is exactly the fixpoint rounds.
-    *
-    * `spark.graft.loop.aqe=true` re-enables AQE inside rounds (the
-    * cluster escape hatch — e.g. a deployment that relies on AQE skew
-    * splitting inside round joins); unset/false is the measured local
-    * AND cluster default: round width is data-derived either way.
+    * AQE-off), which is why the scope is exactly the rounds that measured
+    * faster without it. AQE is off inside `body` whatever the session
+    * says, and the caller's setting is back afterwards, also when `body`
+    * throws.
     */
   def withoutAdaptive[T](spark: org.apache.spark.sql.SparkSession)
-                        (body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val want = spark.conf.getOption("spark.graft.loop.aqe")
-      .orElse(sys.env.get("SPARK_GRAFT_LOOP_AQE")) // A/B knob for tuning runs
-      .map(_.toBoolean).getOrElse(false)
+                        (body: => T): T =
+    withConf(spark, "spark.sql.adaptive.enabled", "false")(body)
+
+  private def withConf[T](spark: org.apache.spark.sql.SparkSession,
+                          key: String, value: String)(body: => T): T = {
     val old = spark.conf.get(key)
-    spark.conf.set(key, want.toString)
+    spark.conf.set(key, value)
     try body finally spark.conf.set(key, old)
   }
 

@@ -235,21 +235,34 @@ object Similarity {
     * (round-17, guide §2): the round's ONLY shuffle carries M·K partial
     * aggregate rows (M = corpus map tasks, K = codebook size — model-
     * sized, never corpus-sized), so the reduce width is derived from
-    * that row count via [[Iteration.roundPartitions]] instead of the
+    * that row count via [[trainPartitions]] instead of the
     * session width (32 near-empty reducers at local sf0.1; still scales
     * to full width when M·K is cluster-sized), and the round plans
     * without AQE ([[Iteration.withoutAdaptive]] — one job per shuffle
     * stage with a driver re-planning gap per round is pure overhead on
-    * a bounded single-shuffle round; SPARK_GRAFT_LOOP_AQE re-enables).
+    * a bounded single-shuffle round).
     * Paired numbers in OPTIMIZATION_r17.md (v23/v24/v25).
     */
   private def trainRound[T](df: DataFrame, modelRows: Long)(body: => T): T = {
     val spark = df.sparkSession
-    // each map task emits at most `modelRows` partial-aggregate rows
-    val mapTasks = df.rdd.getNumPartitions.toLong
-    val parts = Iteration.roundPartitions(spark, mapTasks * modelRows)
-    Iteration.withShufflePartitions(spark, parts)(
+    Iteration.withShufflePartitions(spark, trainPartitions(df, modelRows))(
       Iteration.withoutAdaptive(spark)(body))
+  }
+
+  /** [[trainRound]]'s width: [[Iteration.roundPartitions]] of M·K, each
+    * of the M map tasks emitting at most K = `modelRows` partial rows.
+    * M is read from the planned partitioning, so no job runs: asking an
+    * adaptive plan for its RDD runs every shuffle below it (the
+    * corpus's [[graft.Graft.kernelParallel]] repartition) only to count
+    * its output. An exchange on top fixes M: AQE keeps an explicit
+    * repartition's count and only ever lowers a hash shuffle's. A plan
+    * that reports no count falls back to its RDD, which for a plain
+    * scan costs no job.
+    */
+  private[graft] def trainPartitions(df: DataFrame, modelRows: Long): Int = {
+    val planned = df.queryExecution.sparkPlan.outputPartitioning.numPartitions
+    val mapTasks = if (planned > 0) planned else df.rdd.getNumPartitions
+    Iteration.roundPartitions(df.sparkSession, mapTasks.toLong * modelRows)
   }
 
   def kmeansTrain(df: DataFrame, vecCol: String,

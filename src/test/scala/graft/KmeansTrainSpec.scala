@@ -88,6 +88,22 @@ class KmeansTrainSpec extends SparkTestBase {
     }
   }
 
+  test("the training-round width is read from the plan: no job, and the " +
+      "width counting the corpus partitions gives") {
+    import graft.operators.Iteration
+    // the one-file sf0.001 scan, and the same scan widened to the cores
+    val scan = embeddings
+    val corpus = Graft.kernelParallel(scan)
+    assert(corpus.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Repartition])
+    for (df <- Seq(scan, corpus)) {
+      val (width, jobs) = jobsDuring(Similarity.trainPartitions(df, 65536L))
+      assert(jobs == 0, s"deciding the width launched $jobs jobs")
+      assert(width == Iteration.roundPartitions(spark,
+        df.rdd.getNumPartitions.toLong * 65536L))
+    }
+  }
+
   test("rounds = 0 returns the init codebook unchanged") {
     val vs = collected
     val cb = init(vs)

@@ -25,6 +25,39 @@ class OperatorsSpec extends SparkTestBase {
     assert(Iteration.roundPartitions(spark, 2.8e14.toLong + 7) == cur)
   }
 
+  test("loop scopes: AQE off and the round width inside the body, the " +
+      "caller's settings back afterwards, also when the body throws") {
+    import graft.operators.Iteration
+    val (aqe, width) =
+      ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val session = (spark.conf.get(aqe), spark.conf.get(width))
+    def now() = (spark.conf.get(aqe), spark.conf.get(width))
+    // a one-row input stages in memory at one round partition
+    val in = Iteration.stage(Seq((1L, 2L)).toDF("src", "dst"), "src",
+      _.localCheckpoint())
+    assert(in.parts == 1)
+    val caller = ("true", "7")
+    try {
+      spark.conf.set(aqe, caller._1)
+      spark.conf.set(width, caller._2)
+      // no session setting turns AQE back on inside the rounds
+      spark.conf.set("spark.graft.loop.aqe", "true")
+      assert(Iteration.withoutAdaptive(spark)(now()) == ("false", "7"))
+      assert(in.run(now()) == ("true", "1"))
+      assert(in.run(Iteration.withoutAdaptive(spark)(now())) == ("false", "1"))
+      assert(now() == caller)
+      val thrown = intercept[IllegalStateException](
+        in.run(Iteration.withoutAdaptive(spark)(
+          throw new IllegalStateException("round failed"))))
+      assert(thrown.getMessage == "round failed")
+      assert(now() == caller)
+    } finally {
+      spark.conf.unset("spark.graft.loop.aqe")
+      spark.conf.set(aqe, session._1)
+      spark.conf.set(width, session._2)
+    }
+  }
+
   test("minSpacingSweep keeps first and enforces gap against last KEPT") {
     // ts: 0, 50, 120, 130, 200 with gap 100:
     // keep 0 (first); drop 50 (<100 after 0); keep 120; drop 130; keep 200? 200-120=80 <100 → drop.

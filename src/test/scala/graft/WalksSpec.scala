@@ -386,4 +386,46 @@ class WalksSpec extends SparkTestBase {
     // 10^9 x, z is distance-2 from x at neutral-ish 10^4 -> z wins
     assert(got == Seq("x", "y", "z"), s"got=$got")
   }
+
+  test("randomWalks reads a src-bucketed edge table at rest: the same " +
+      "walks, no edge checkpoint, and a step plans one hash exchange fewer") {
+    import graft.graph.Routing
+    import graft.operators.Iteration
+    Routing.stageEdgesTable(edges, "graft_walk_edges_spec", buckets = 4)
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val table = spark.table("graft_walk_edges_spec")
+      val seeds = Seq(("w1", "a"), ("w2", "b"), ("w3", "c"))
+        .toDF("walk_id", "node")
+      // the walks launch one job per step plus the seeds' checkpoint,
+      // and in memory one more: the edges' checkpoint
+      val (atRest, restJobs) =
+        jobsDuring(Walks.randomWalks(table, seeds, len = 6))
+      val (inMemory, memJobs) =
+        jobsDuring(Walks.randomWalks(edges, seeds, len = 6))
+      assert(restJobs == memJobs - 1, s"$restJobs vs $memJobs jobs")
+      assert(atRest.collect().toSet == inMemory.collect().toSet)
+      assert(spark.sharedState.cacheManager.isEmpty)
+      val in = Iteration.stage(table.select(col("src"), col("dst")), "src",
+        _.localCheckpoint(), sized = false)
+      try {
+        assert(in.atRest)
+        val cur = seeds.localCheckpoint()
+        def exchanges(e: org.apache.spark.sql.DataFrame): Int =
+          Iteration.withShufflePartitions(spark, in.parts) {
+            Walks.walkStep(e, cur, 1, 0).queryExecution.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+              .linesIterator.count(_.contains("Exchange hashpartitioning"))
+          }
+        val (nb, np) = (exchanges(in.frame),
+          exchanges(edges.select(col("src"), col("dst")).localCheckpoint()))
+        assert(nb == np - 1,
+          s"a step over the table has $nb exchanges vs plain $np")
+      } finally in.run(())
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      spark.sql("DROP TABLE IF EXISTS graft_walk_edges_spec")
+    }
+  }
 }
