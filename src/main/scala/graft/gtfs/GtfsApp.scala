@@ -1,116 +1,97 @@
 package graft.gtfs
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
-import graft.streaming.StreamingJobs
 
 /** Pillar P5 — the reference's GitHub-Actions DAG as one Spark application
   * (SURVEY §3: update-routes → generate-gtfs → zip, with the
   * `git diff --quiet` publish gate replaced by content hashes).
   *
+  * The gate hashes exactly the bytes it publishes: every feed file is
+  * rendered into a staging directory first, and `.content_hashes` holds
+  * one `<file name>=<MD5 hex>` line per file, so `md5sum` over the
+  * published feed reproduces it.
+  *
   * Usage: GtfsApp <referenceRootDir> <outDir> [--lint]
   */
 object GtfsApp {
-  def main(args: Array[String]): Unit = {
-    val Array(rootDir, outDir) = args.take(2)
-    val lint = args.drop(2).contains("--lint")
-    val spark = graft.Graft.session()
-    val t0 = System.nanoTime()
-    run(spark, rootDir, outDir, lint)
-    println(f"[gtfs] pipeline (build+hash+write+zip) took " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s (excl. session startup)")
-    spark.stop()
+  def main(args: Array[String]): Unit = args match {
+    case Array(rootDir, outDir, flags @ _*) =>
+      val spark = graft.Graft.session()
+      val t0 = System.nanoTime()
+      run(spark, rootDir, outDir, flags.contains("--lint"))
+      println(f"[gtfs] pipeline (build+hash+write+zip) took " +
+        f"${(System.nanoTime() - t0) / 1e9}%.1f s (excl. session startup)")
+      spark.stop()
+    case _ =>
+      System.err.println("usage: GtfsApp <referenceRootDir> <outDir> [--lint]")
+      sys.exit(2)
   }
 
-  /** Build the feed; write + zip only the tables whose content changed
-    * since the last run (I2). Returns the per-table content hashes.
+  /** Build the feed and publish it into `outDir` only if its bytes changed
+    * since the last run (I2). Returns the MD5 of every feed file, keyed by
+    * file name.
     *
-    * `lint = true` adds a FEED-QA GATE before any byte is written — the
-    * s16 write–audit–publish shape applied to the GTFS pillar: the
-    * built tables run through [[FeedLint.lint]] and a violation aborts
-    * the publish with the offending rules in the message (nothing
-    * lands, the content-hash file is untouched, the next clean run
-    * publishes normally). Off by default: the reference DAG has no
-    * such gate, and the benchmarked app must time the reference's
-    * work, not more.
+    * Every feed file is staged under `outDir` first. Publish deletes the
+    * old `.txt` tables (a table dropped from the source must leave the
+    * feed), moves the staged ones in, zips them and writes
+    * `.content_hashes` last, so an interrupted publish is redone by the
+    * next run.
+    *
+    * `lint = true` adds a FEED-QA GATE before publish — the s16
+    * write–audit–publish shape: the staged CSVs run through
+    * [[FeedLint.lint]] and a violation aborts the publish with the
+    * offending rules in the message. An unchanged feed skips the gate.
+    * Off by default: the reference DAG has no such gate, and the
+    * benchmarked app must time the reference's work, not more.
     */
   def run(spark: SparkSession, rootDir: String, outDir: String,
           lint: Boolean = false): Map[String, String] = {
-    // listed first: a missing source gtfs/ dir fails before any work
-    val passThrough = GtfsWriter.passThroughFiles(s"$rootDir/gtfs")
-    val built = GtfsPipeline.build(spark, rootDir)
-    // materialize each table once: the content hash and the CSV write
-    // would otherwise each recompute the full per-relation pipeline
-    // (measured 38 s -> ~20 s end-to-end on the reference feed).
-    // CONCURRENTLY: the seven tables are independent DAGs and Spark
-    // schedules concurrent jobs fine; sequential materialization left
-    // the cluster idle between stages (measured 8.6 -> 5.5 s, end-to-end
-    // 21.0 -> 18.1 s; outputs byte-identical, goldens green).
-    val tB = System.nanoTime()
-    def ck(n: String, df: org.apache.spark.sql.DataFrame) = {
-      val t = System.nanoTime()
-      val r = df.localCheckpoint()
-      println(f"[gtfs]     $n ${(System.nanoTime() - t) / 1e9}%.1f s")
-      r
+    // a missing source gtfs/ dir fails before any work
+    GtfsWriter.passThroughFiles(s"$rootDir/gtfs")
+    val g = GtfsPipeline.build(spark, rootDir)
+    val out = Files.createDirectories(Paths.get(outDir))
+    val stage = Files.createTempDirectory(out, ".staging")
+    try {
+      GtfsWriter.writeAll(g, stage.toString)
+      val names = (GtfsWriter.FieldOrder.keys ++ GtfsWriter.passThroughTables(
+        s"$rootDir/gtfs", stage.toString)).toSeq.sorted
+      val hashes = names.map(n => n -> md5(stage.resolve(n))).toMap
+      val manifest = names.map(n => s"$n=${hashes(n)}").mkString("\n")
+      val hashFile = out.resolve(".content_hashes")
+      if (!Files.exists(hashFile) || Files.readString(hashFile) != manifest) {
+        if (lint) lintGate(readFeed(spark, stage))
+        Files.deleteIfExists(hashFile)
+        val listing = Files.list(out)
+        try listing.filter(_.getFileName.toString.endsWith(".txt")).toList
+          .forEach(p => Files.delete(p))
+        finally listing.close()
+        names.foreach(n => Files.move(stage.resolve(n), out.resolve(n)))
+        GtfsWriter.zipFeed(outDir, s"$outDir/gtfs.zip")
+        Files.writeString(hashFile, manifest)
+      }
+      hashes
+    } finally {
+      Files.walk(stage).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val futures = Seq(
-      "agency" -> built.agency, "routes" -> built.routes,
-      "stops" -> built.stops, "shapes" -> built.shapes,
-      "trips" -> built.trips, "stop_times" -> built.stopTimes,
-      "calendar" -> built.calendar)
-      .map { case (n, df) => Future(ck(n, df)) }
-    val Seq(agM, rtM, stM, shM, trM, sttM, calM) =
-      futures.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    val g = GtfsPipeline.Gtfs(agM, rtM, stM, shM, trM, sttM, calM)
-    println(f"[gtfs]   build+materialize ${(System.nanoTime() - tB) / 1e9}%.1f s")
-    val tables = Map(
-      "agency" -> g.agency, "routes" -> g.routes, "stops" -> g.stops,
-      "shapes" -> g.shapes, "trips" -> g.trips, "stop_times" -> g.stopTimes,
-      "calendar" -> g.calendar)
-    val tH = System.nanoTime()
-    // the publish gate must also see the hand-maintained pass-through
-    // tables (fares/transfers): the reference's `git diff --quiet` gate
-    // covers the whole gtfs dir, so an edit to fare_rules.txt alone must
-    // trigger a re-publish even when every generated table is unchanged
-    val passThroughHashes: Map[String, String] =
-      passThrough.map { p =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        s"file:${p.getFileName}" ->
-          md.digest(java.nio.file.Files.readAllBytes(p))
-            .map("%02x".format(_)).mkString
-      }.toMap
-    val hashes = tables.map { case (n, df) =>
-      n -> StreamingJobs.contentHash(df) } ++ passThroughHashes
-    println(f"[gtfs]   content hashes ${(System.nanoTime() - tH) / 1e9}%.1f s")
+  }
 
-    val hashFile = java.nio.file.Paths.get(outDir, ".content_hashes")
-    val previous: Map[String, String] =
-      if (java.nio.file.Files.exists(hashFile))
-        java.nio.file.Files.readAllLines(hashFile).toArray(Array.empty[String])
-          .flatMap { l => l.split("=", 2) match {
-            case Array(k, v) => Some(k -> v); case _ => None } }.toMap
-      else Map.empty
+  /** MD5 of a file's bytes in lowercase hex, as `md5sum` prints it. */
+  private def md5(p: Path): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val in = new java.security.DigestInputStream(Files.newInputStream(p), md)
+    try in.transferTo(java.io.OutputStream.nullOutputStream()) finally in.close()
+    md.digest().map("%02x".format(_)).mkString
+  }
 
-    if (hashes != previous) {
-      // audit BEFORE publish, but only when a publish would happen at
-      // all: an unchanged feed skips the gate (and cannot be wedged by
-      // a latent violation it already shipped). The lint runs over the
-      // already-materialized tables (localCheckpoints above), so each
-      // rule is a cheap scan, not a pipeline recompute.
-      if (lint) lintGate(g)
-      val tW = System.nanoTime()
-      GtfsWriter.writeAll(g, outDir)
-      println(f"[gtfs]   writeAll ${(System.nanoTime() - tW) / 1e9}%.1f s")
-      // hand-maintained tables (fares, transfers) ride along with the
-      // generated ones, matching the reference's whole-dir zip
-      GtfsWriter.passThroughTables(s"$rootDir/gtfs", outDir)
-      GtfsWriter.zipFeed(outDir, s"$outDir/gtfs.zip")
-      java.nio.file.Files.createDirectories(hashFile.getParent)
-      java.nio.file.Files.writeString(hashFile,
-        hashes.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    }
-    hashes
+  /** The generated tables of a written feed, as a CSV reader sees them. */
+  private def readFeed(spark: SparkSession, dir: Path): GtfsPipeline.Gtfs = {
+    def t(n: String) = spark.read.option("header", "true")
+      .option("multiLine", "true").csv(dir.resolve(s"$n.txt").toString)
+    GtfsPipeline.Gtfs(t("agency"), t("routes"), t("stops"), t("shapes"),
+      t("trips"), t("stop_times"), t("calendar"))
   }
 
   /** The publish gate itself, separated so the abort path is directly

@@ -244,14 +244,18 @@ object GtfsPipeline {
       .filter { case (a, d) =>
         new java.io.File(s"$scheduleDir/${a}_$d.csv").isFile }
     if (keys.isEmpty) {
+      // trip_num is null, not "": build casts it to int, and under ANSI
+      // mode the constant-folded cast of "" fails even on zero rows
       val et = spark.range(0).select(
         lit(0).as("cat_idx"), lit(0).as("group_idx"), lit(0).as("route_idx"),
-        lit("").as("trip_num"), lit("").as("route_id"), lit("").as("trip_id"),
+        lit(null).cast("string").as("trip_num"), lit("").as("route_id"),
+        lit("").as("trip_id"),
         lit("").as("service_id"), lit("").as("trip_headsign"),
         lit(0).as("direction_id"), lit("").as("shape_id"), lit("").as("block_id"))
       val est = spark.range(0).select(
         lit(0).as("cat_idx"), lit(0).as("group_idx"), lit(0).as("route_idx"),
-        lit("").as("trip_num"), lit("").as("trip_id"), lit("").as("stop_id"),
+        lit(null).cast("string").as("trip_num"), lit("").as("trip_id"),
+        lit("").as("stop_id"),
         lit(0).as("stop_sequence"), lit("").as("arrival_time"),
         lit("").as("departure_time"), lit(0).as("pickup_type"),
         lit(0).as("drop_off_type"))
@@ -313,10 +317,10 @@ object GtfsPipeline {
 
   def build(spark: SparkSession, rootDir: String): Gtfs = {
     val cfg = GtfsSources.config(spark, s"$rootDir/routes.json")
-    val rts = GtfsSources.routes(cfg).cache()
+    val rts = cacheAnew(GtfsSources.routes(cfg))
     val stopFeats = GtfsSources.stopFeatures(spark, s"$rootDir/route-data/geojson")
     val ways = GtfsSources.wayLines(spark, s"$rootDir/route-data/geojson")
-    val shp = shapesTable(rts, ways).cache()
+    val shp = cacheAnew(shapesTable(rts, ways))
     val (busTrips, busSt) = busTripsAndStopTimes(rts, stopFeats, shp)
     val (trainTrips, trainSt) =
       trainTripsAndStopTimes(spark, rts, s"$rootDir/route-data/schedule", shp)
@@ -341,6 +345,12 @@ object GtfsPipeline {
     Gtfs(agencies(cfg), routesTable(cfg), stopsTable(rts, stopFeats), shp,
       trips, stopTimes, calendar(spark))
   }
+
+  /** Cache `df` after dropping an earlier build's entry for the same plan:
+    * a plan names its source paths, not their content, so a rebuild after
+    * a source edit would otherwise read the earlier build's rows.
+    */
+  private def cacheAnew(df: DataFrame): DataFrame = df.unpersist().cache()
 
   private val tripCols = Seq("route_id", "trip_id", "service_id",
     "trip_headsign", "direction_id", "shape_id", "block_id").map(col)

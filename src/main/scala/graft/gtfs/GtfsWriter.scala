@@ -16,6 +16,10 @@ import java.nio.file.{Files, Paths}
   * single-file rename is driver-side because GTFS consumers require one
   * file per table (reference scale). At 100 TB you would keep the
   * partitioned directory and zip per-part.
+  *
+  * The files written here are the publish gate's input: [[GtfsApp]] hashes
+  * each one's bytes with MD5 into `.content_hashes`, which `md5sum` over
+  * the published feed can check.
   */
 object GtfsWriter {
 
@@ -115,8 +119,15 @@ object GtfsWriter {
     "calendar.txt" -> Seq("service_id", "monday", "tuesday", "wednesday",
       "thursday", "friday", "saturday", "sunday", "start_date", "end_date"))
 
-  /** Write the full feed (the 7 generated tables) to `outDir`. */
+  /** Write the full feed (the 7 generated tables) to `outDir`.
+    * CONCURRENTLY: the tables are independent DAGs and Spark schedules
+    * concurrent jobs fine; one table at a time leaves the cluster idle
+    * between stages. Waits for every table before rethrowing a failure.
+    */
   def writeAll(g: GtfsPipeline.Gtfs, outDir: String): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
     Files.createDirectories(Paths.get(outDir))
     val ordered = Seq(
       ("agency.txt", g.agency.orderBy("cat_idx")),
@@ -126,9 +137,11 @@ object GtfsWriter {
       ("stop_times.txt", g.stopTimes),
       ("shapes.txt", g.shapes.orderBy("shape_id", "shape_pt_sequence")),
       ("calendar.txt", g.calendar))
-    ordered.foreach { case (name, df) =>
-      writeTable(df, FieldOrder(name), outDir, name)
+    val writes = ordered.map { case (name, df) =>
+      Future(writeTable(df, FieldOrder(name), outDir, name))
     }
+    writes.foreach(Await.ready(_, Duration.Inf))
+    writes.foreach(_.value.get.get)
   }
 
   /** The hand-maintained (non-generated) GTFS tables of the input feed
@@ -163,8 +176,9 @@ object GtfsWriter {
     }
 
   /** K5: zip the written feed (driver-side, feed is one-file-per-table).
-    * Only `.txt` tables are zipped — the feed dir may also hold the
-    * previous gtfs.zip and the .content_hashes gate file on re-runs.
+    * Every `.txt` table in the dir is zipped, and nothing else: the feed
+    * dir also holds gtfs.zip and the .content_hashes gate file on re-runs,
+    * and [[GtfsApp]] deletes the tables that left the feed before zipping.
     */
   def zipFeed(gtfsDir: String, zipPath: String): Unit = {
     val zos = new java.util.zip.ZipOutputStream(
@@ -174,7 +188,7 @@ object GtfsWriter {
       stream.sorted().forEach { p =>
         if (Files.isRegularFile(p) && p.getFileName.toString.endsWith(".txt")) {
           zos.putNextEntry(new java.util.zip.ZipEntry(p.getFileName.toString))
-          zos.write(Files.readAllBytes(p))
+          Files.copy(p, zos)
           zos.closeEntry()
         }
       }

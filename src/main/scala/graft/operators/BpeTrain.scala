@@ -90,7 +90,7 @@ object BpeTrain {
 
   /** Order-insensitive corpus fingerprint for [[learnMergesCached]]:
     * one map-side-combined aggregate over the text column (sum of
-    * per-row xxhash64 in decimal — the I2 contentHash shape), plus the
+    * per-row xxhash64 in decimal), plus the
     * row count and `k`. One cheap corpus scan, vs the full train's
     * word-frequency pass + k merge rounds.
     */

@@ -137,35 +137,34 @@ object GtfsSources {
         col("f.geometry.coordinates").getItem(0).as("lon"),
         col("f.geometry.coordinates").getItem(1).as("lat"))
 
-  private def waysSchema(depth: Int): StructType = {
-    val coords = (1 to depth).foldLeft[DataType](DoubleType)((t, _) => ArrayType(t))
-    StructType(Seq(StructField("features", ArrayType(StructType(Seq(
+  /** ways.geojson with each feature's coordinates kept as their raw JSON
+    * text: one schema reads both nesting depths.
+    */
+  private val WaysSchema: StructType = StructType(Seq(
+    StructField("features", ArrayType(StructType(Seq(
       StructField("geometry", StructType(Seq(
         StructField("type", StringType),
-        StructField("coordinates", coords))))))))))
-  }
+        StructField("coordinates", StringType))))))))))
 
   /** All ways.geojson features as one coordinates array per feature, in
     * feature order; MultiLineString features are flattened line-by-line in
-    * order, exactly like generate_gtfs.py:143-159. Two permissive reads
-    * (one per nesting depth); a mismatched depth parses to null and is
-    * filtered by geometry type.
+    * order, exactly like generate_gtfs.py:143-159. One read; the
+    * coordinates are parsed by geometry type, and other geometry types are
+    * dropped.
     */
   def wayLines(spark: SparkSession, geojsonDir: String): DataFrame = {
-    def read(depth: Int, geomType: String, flattenIt: Boolean): DataFrame = {
-      val base = spark.read.option("multiLine", "true").schema(waysSchema(depth))
-        .json(s"$geojsonDir/*/ways.geojson")
-        .select(
-          regexp_extract(input_file_name(), "/([^/]+)/ways\\.geojson$", 1)
-            .as("relation_id"),
-          posexplode(col("features")).as(Seq("feature_idx", "f")))
-        .filter(col("f.geometry.type") === geomType)
-      val coords = if (flattenIt) flatten(col("f.geometry.coordinates"))
-                   else col("f.geometry.coordinates")
-      base.select(col("relation_id"), col("feature_idx"), coords.as("coords"))
-    }
-    read(2, "LineString", flattenIt = false)
-      .unionByName(read(3, "MultiLineString", flattenIt = true))
+    val line = ArrayType(ArrayType(DoubleType))
+    val raw = col("f.geometry.coordinates")
+    spark.read.option("multiLine", "true").schema(WaysSchema)
+      .json(s"$geojsonDir/*/ways.geojson")
+      .select(
+        regexp_extract(input_file_name(), "/([^/]+)/ways\\.geojson$", 1)
+          .as("relation_id"),
+        posexplode(col("features")).as(Seq("feature_idx", "f")))
+      .filter(col("f.geometry.type").isin("LineString", "MultiLineString"))
+      .select(col("relation_id"), col("feature_idx"),
+        when(col("f.geometry.type") === "LineString", from_json(raw, line))
+          .otherwise(flatten(from_json(raw, ArrayType(line)))).as("coords"))
   }
 
   /** Long-form rows of one pivoted schedule matrix (S3/U1,

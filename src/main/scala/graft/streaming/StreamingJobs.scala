@@ -790,22 +790,4 @@ object StreamingJobs {
       .trigger(Trigger.AvailableNow())
       .start()
       .awaitTermination()
-
-  /** I2: content-hash change detection — stable hash of a DataFrame's full
-    * content (order-insensitive), the engine-side equivalent of the
-    * reference's `git diff --quiet` publish gate.
-    */
-  def contentHash(df: DataFrame): String = {
-    // Hash columns as separate xxhash64 arguments (each value is chained
-    // with its own type/length, so ("ab","") vs ("a","b") differ -- no
-    // separator byte to collide with), plus an explicit null flag per
-    // column (xxhash64 skips null arguments, which would otherwise
-    // collide null with absent and make null position irrelevant).
-    val cols = df.columns.sorted
-      .flatMap(c => Seq(col(c).cast("string"), col(c).isNull))
-      .toIndexedSeq
-    df.select(xxhash64(cols: _*).as("h"))
-      .agg(sum(col("h").cast("decimal(38,0)")).as("s"))
-      .collect()(0).get(0).toString
-  }
 }

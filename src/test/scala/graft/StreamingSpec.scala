@@ -529,31 +529,6 @@ class StreamingSpec extends SparkTestBase {
     spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  test("contentHash is order-insensitive and change-sensitive") {
-    val a = Seq((1, "x"), (2, "y")).toDF("k", "v")
-    val b = Seq((2, "y"), (1, "x")).toDF("k", "v")
-    val c = Seq((1, "x"), (2, "z")).toDF("k", "v")
-    assert(StreamingJobs.contentHash(a) == StreamingJobs.contentHash(b))
-    assert(StreamingJobs.contentHash(a) != StreamingJobs.contentHash(c))
-  }
-
-  test("contentHash separates column boundaries and null from empty") {
-    // values shifting across column boundaries must change the hash
-    val ab = Seq(("ab", "")).toDF("x", "y")
-    val a_b = Seq(("a", "b")).toDF("x", "y")
-    assert(StreamingJobs.contentHash(ab) != StreamingJobs.contentHash(a_b))
-    // null is not the same content as empty string
-    val withNull = Seq((null.asInstanceOf[String], "z")).toDF("x", "y")
-    val withEmpty = Seq(("", "z")).toDF("x", "y")
-    assert(StreamingJobs.contentHash(withNull) !=
-      StreamingJobs.contentHash(withEmpty))
-    // a null moving between columns is a content change too
-    val nullLeft = Seq((null.asInstanceOf[String], "q")).toDF("x", "y")
-    val nullRight = Seq(("q", null.asInstanceOf[String])).toDF("x", "y")
-    assert(StreamingJobs.contentHash(nullLeft) !=
-      StreamingJobs.contentHash(nullRight))
-  }
-
   test("transitionStream chains across batches; in-batch event-time order; " +
     "counts equal the batch matrix on an in-order replay") {
     import StreamingJobs.{TEv, Transition}
